@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -71,35 +71,6 @@ object SaltedRuns {
       .collect().map(_.get(0)).filter(_ != null).toSeq
   }
 
-  /** Column-pruning guard for the boundary-summary aggregates (r19;
-    * found by the ADVICE-r18 executed-plan spec): the one-exchange
-    * guarantee rests on AQE stage reuse, which needs the summary's and
-    * the final consumer's exchange subtrees CANONICALLY IDENTICAL —
-    * but Catalyst prunes the payload columns the summary never reads
-    * out of its branch's Project, silently de-canonicalizing the two
-    * exchanges whenever the input carries any column outside
-    * {key, ord, ties, carry}. The fork re-executes the whole upstream
-    * (scan included) per consumer — the exact 2-4x regression class
-    * the __sr_ih agg-output filter killed for grouping-key filters.
-    * The guard: one max(xxhash64(payload…)) aggregate referencing
-    * EVERY input column (8-byte buffer per group, one codegen'd hash
-    * per row on the summary pass), kept alive by a semantics-neutral
-    * isNotNull filter (Catalyst drops an unused aggregate expression,
-    * and the pruning returns with it). Map-typed columns are skipped
-    * (xxhash64 rejects them) — a map payload column would still fork.
-    */
-  private def pruneGuard(df: DataFrame): Column = {
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-    def hasMap(dt: DataType): Boolean = dt match {
-      case _: MapType => true
-      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
-      case a: ArrayType => hasMap(a.elementType)
-      case _ => false
-    }
-    val hashable = df.schema.fields.filterNot(f => hasMap(f.dataType)).map(f => col(f.name))
-    if (hashable.isEmpty) max(lit(0L)) else max(xxhash64(hashable.toIndexedSeq: _*))
-  }
-
   private def singleLevelRuns(df: DataFrame, key: String, ordCols: Seq[Column],
       cur: Column, newRun: (Column, Column) => Column, outCol: String): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(ordCols: _*)
@@ -132,23 +103,59 @@ object SaltedRuns {
       .agg(percentile_approx(col(ord), probes, lit(10000)).as("__sr_qs"))
   }
 
-  /** The salted sub-window + boundary-repair path in the ONE-SCAN,
-    * ONE-EXCHANGE shape [[chunkedCarry]] pioneered (r18): EVERY row —
-    * cold keys included — rides one (key, bucket) exchange. Cold keys
-    * take bucket 0 from the broadcast LEFT join's null splits (a
-    * constant bucket, so their local window IS the plain per-key run
-    * numbering), hot rows bucket by sampled per-key range splits of
-    * the order key. The boundary-repair summary computes from the HOT
-    * rows only as a second consumer of the SAME exchange
-    * (ReuseExchange: scan + shuffle execute once; only the window
-    * re-evaluates, over hot rows), and the ≤64-keys × buckets repair
-    * frame broadcast-LEFT-joins back — cold rows miss it and keep
-    * their exact local numbering (base 0, merge 0). The pre-r18 shape
-    * filtered the corpus TWICE (cold + hot branches, each re-executing
-    * the upstream scan), ran an exact per-key quantile aggregate as a
-    * THIRD full pass, and localCheckpointed the hot slice — the same
-    * 3-scan io-weather amplifier the as-of gate measured 16–158 s
-    * swings from (SCALING.md r18).
+  private val srOrd = "__sr_ord"
+  private val srBkt = "__sr_b"
+
+  /** Null-safe hotness: a null key is never hot. */
+  private def isHot(key: String, hot: Seq[Any]): Column =
+    coalesce(col(key).isInCollection(hot), lit(false))
+
+  /** `df` plus `__sr_ord` and `__sr_b`, in the ONE (key, bucket)
+    * exchange every row of a salted path rides (r18). Hot rows bucket by
+    * their key's sampled range splits of the order key; cold keys, and
+    * hot keys whose sampled ords were all null, miss the broadcast LEFT
+    * join, and `filter()` over their null splits yields null, so their
+    * bucket coalesces to the constant 0 — whose (key, 0) window IS the
+    * plain per-key window.
+    *
+    * Width is explicit (REPARTITION_BY_NUM, exempt from AQE coalescing)
+    * and comes from the INPUT frame: rangeWidth over the joined frame
+    * sees the broadcast join's multiplied sizeInBytes estimate and
+    * saturates the 1024 cap (measured: 1024-task window stages vs the
+    * plain path's 345 on the same bytes).
+    *
+    * The exchange sits behind a prune barrier. Each salted operator has
+    * two consumers of it: the local window, and the boundary summary
+    * over hot rows only. They read different columns and filter
+    * differently, and without the barrier Catalyst pushes each one's
+    * column pruning and filters below the exchange. The two exchange
+    * subtrees then differ, AQE cannot reuse one for the other, and the
+    * whole upstream, scan included, runs once per consumer. Behind the
+    * barrier both plan the same exchange, which runs once and is
+    * reused; the barrier itself plans to no physical operator.
+    */
+  private def bucketed(df: DataFrame, key: String, hotSplits: Seq[(Any, Any)],
+      ordExpr: Column): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+    val splitsDf = df.sparkSession.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(hotSplits.map { case (k, qs) =>
+        org.apache.spark.sql.Row(k, qs) }).asJava,
+      StructType(Seq(StructField(key, df.schema(key).dataType),
+        StructField("__sr_qs", ArrayType(DoubleType)))))
+    GraftBridge.barrier(df.withColumn(srOrd, ordExpr.cast("double"))
+      .join(broadcast(splitsDf), Seq(key), "left")
+      .withColumn(srBkt,
+        coalesce(size(filter(col("__sr_qs"), v => v <= col(srOrd))), lit(0)))
+      .drop("__sr_qs")
+      .repartition(GlobalRank.rangeWidth(df), col(key), col(srBkt)))
+  }
+
+  /** The salted sub-window + boundary-repair path over the
+    * [[bucketed]] exchange. Runs number locally per (key, bucket); the
+    * boundary-repair summary is a second consumer of the same exchange
+    * over the hot rows only, and its ≤64-keys × buckets repair frame
+    * broadcast-LEFT-joins back — cold rows miss it and keep their exact
+    * local numbering (base 0, merge 0).
     *
     * buckets stays CALLER-FIXED (16 default) — an r15 measured
     * rejection: flooring it at the hot frame's range width to chase
@@ -169,35 +176,10 @@ object SaltedRuns {
   private def saltedRuns(df: DataFrame, key: String,
       hotSplits: Seq[(Any, Any)], ordExpr: Column, tieCols: Seq[Column],
       cur: Column, newRun: (Column, Column) => Column,
-      outCol: String, keepHotCol: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    val ord = "__sr_ord"
-    val bkt = "__sr_b"
-    val ordCols = col(ord) +: tieCols
-    val keyType = df.schema(key).dataType
-    val splitsDf = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(hotSplits.map { case (k, qs) =>
-        org.apache.spark.sql.Row(k, qs) }).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(key, keyType),
-        org.apache.spark.sql.types.StructField("__sr_qs",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-    // LEFT join: cold keys (and hot keys whose sampled ords were all
-    // null) get null splits — filter() over a null array yields null,
-    // so their bucket coalesces to the constant 0
-    val withB = df.withColumn(ord, ordExpr.cast("double"))
-      .join(broadcast(splitsDf), Seq(key), "left")
-      .withColumn(bkt,
-        coalesce(size(filter(col("__sr_qs"), v => v <= col(ord))), lit(0)))
-      .drop("__sr_qs")
-    // explicit width (REPARTITION_BY_NUM, exempt from AQE coalescing):
-    // the ONE exchange of the whole operator. Width from the INPUT
-    // frame — rangeWidth(withB) would see the broadcast join's
-    // multiplied sizeInBytes estimate and saturate the 1024 cap (the
-    // chunkedCarry lesson: 3× the tasks on the same bytes)
-    val pinned = withB.repartition(GlobalRank.rangeWidth(df), col(key), col(bkt))
-    val w1 = Window.partitionBy(col(key), col(bkt)).orderBy(ordCols: _*)
+      outCol: String): DataFrame = {
+    val ordCols = col(srOrd) +: tieCols
+    val pinned = bucketed(df, key, hotSplits, ordExpr)
+    val w1 = Window.partitionBy(col(key), col(srBkt)).orderBy(ordCols: _*)
     def flagged(part: DataFrame): DataFrame = part
       .withColumn("__sr_prev", lag(cur, 1).over(w1))
       .withColumn("__sr_chg",
@@ -205,34 +187,14 @@ object SaltedRuns {
       .withColumn("__sr_lv", sum(col("__sr_chg")).over(
         w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     // O(buckets) rows per hot key: boundary repair + cumulative
-    // offsets. The summary aggregates the SAME windowed exchange the
-    // final join consumes and keeps hot keys via a filter on an
-    // AGGREGATE OUTPUT (__sr_ih), not on the grouping key: a grouping-
-    // key filter pushes below the window and the repartition, FORKING
-    // the exchange into a hot-only copy that re-executes the whole
-    // upstream — measured 2-4× on the nested scd2 pipeline (q_scd2
-    // 62.5 s vs 15.4 under load at sf10skew) before this form. An
-    // agg-output filter cannot push below the Aggregate, the agg
-    // itself rides the (key, bucket) clustering with no exchange, and
-    // ReuseExchange makes the shuffle files the shared materialization
-    // point — the side-channel costs one extra window pass over the
-    // exchange output, never a re-scan. min_by/max_by pick each
-    // bucket's first/last carry struct under the same total order the
-    // window used.
-    val isHot = coalesce(
-      col(key).isInCollection(hotSplits.map(_._1)), lit(false))
-    val summ = flagged(pinned).groupBy(col(key), col(bkt))
+    // offsets. min_by/max_by pick each bucket's first/last carry struct
+    // under the same total order the window used.
+    val summ = flagged(pinned.filter(isHot(key, hotSplits.map(_._1))))
+      .groupBy(col(key), col(srBkt))
       .agg(min_by(cur, struct(ordCols: _*)).as("__sr_first"),
         max_by(cur, struct(ordCols: _*)).as("__sr_last"),
-        max(col("__sr_lv")).as("__sr_runs"),
-        max(when(isHot, lit(1)).otherwise(lit(0))).as("__sr_ih"),
-        pruneGuard(df).as("__sr_guard"))
-      // __sr_guard.isNotNull is an identity filter (max over a
-      // non-empty group) whose only job is keeping the guard aggregate
-      // alive — see [[pruneGuard]]
-      .filter(col("__sr_ih") === 1 && col("__sr_guard").isNotNull)
-      .drop("__sr_ih", "__sr_guard")
-    val w2 = Window.partitionBy(col(key)).orderBy(col(bkt))
+        max(col("__sr_lv")).as("__sr_runs"))
+    val w2 = Window.partitionBy(col(key)).orderBy(col(srBkt))
     val fix = summ
       .withColumn("__sr_pl", lag(col("__sr_last"), 1).over(w2))
       .withColumn("__sr_merge", when(col("__sr_pl").isNotNull &&
@@ -240,22 +202,13 @@ object SaltedRuns {
       .withColumn("__sr_eff", col("__sr_runs") - col("__sr_merge"))
       .withColumn("__sr_base", coalesce(sum(col("__sr_eff")).over(
         w2.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col(key), col(bkt), col("__sr_merge"), col("__sr_base"))
+      .select(col(key), col(srBkt), col("__sr_merge"), col("__sr_base"))
     // broadcast LEFT: hot keys × buckets rows — bounded by the 64-key
-    // cap; cold (and null-key) rows miss and keep their local numbers.
-    // keepHotCol (r19, chunkedRowsAgg): expose join-match presence as
-    // a hotness flag column. A downstream filter on it rewrites to
-    // IsNotNull on the broadcast side's columns, which pushes only
-    // into the TINY fix frame (EliminateOuterJoin makes that branch's
-    // join inner) — never below the window/exchange, so the one-scan
-    // guarantee survives, unlike a raw isInCollection(key) predicate
-    // that Catalyst pushes to the scan and forks the exchange with.
-    val joined = flagged(pinned).join(broadcast(fix), Seq(key, bkt), "left")
+    // cap; cold (and null-key) rows miss and keep their local numbers
+    flagged(pinned).join(broadcast(fix), Seq(key, srBkt), "left")
       .withColumn(outCol, coalesce(col("__sr_base"), lit(0L)) + col("__sr_lv")
         - coalesce(col("__sr_merge"), lit(0L)))
-    keepHotCol.fold(joined)(h =>
-        joined.withColumn(h, col("__sr_base").isNotNull))
-      .drop(bkt, ord, "__sr_prev", "__sr_chg", "__sr_lv", "__sr_merge", "__sr_base")
+      .drop(srBkt, srOrd, "__sr_prev", "__sr_chg", "__sr_lv", "__sr_merge", "__sr_base")
   }
 
   /** Append `outCol` = 1-based global run number per `key`, where a new
@@ -278,102 +231,46 @@ object SaltedRuns {
       outCol: String, buckets: Int = 16, hotThreshold: Long = 1000000L,
       hotOverride: Option[Seq[Any]] = None): DataFrame = {
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
-    if (buckets == 1)
-      return numberedWithSplits(df, key, ordExpr, tieCols, carryCols, newRun,
-        outCol, Nil, None)
     // hot keys AND their sampled splits from ONE 1% sample scan —
     // with a caller-supplied empty hot list this costs zero jobs
-    val hotSplits = detectHotSplits(df, key, ordExpr, buckets, hotThreshold,
-      hotOverride)
-    numberedWithSplits(df, key, ordExpr, tieCols, carryCols, newRun, outCol,
-      hotSplits, None)
-  }
-
-  /** [[numbered]] with the hot keys' sampled splits supplied by the
-    * caller — so an operator that already paid [[detectHotSplits]]'s
-    * sample scan (e.g. [[chunkedRowsAgg]]) never probes twice.
-    * `keepHotCol`: optionally retain a boolean hotness column derived
-    * from the repair join's match (see [[saltedRuns]]) — the only
-    * filter-safe hotness carrier on the one-exchange path.
-    */
-  private[graft] def numberedWithSplits(df: DataFrame, key: String,
-      ordExpr: Column, tieCols: Seq[Column], carryCols: Seq[Column],
-      newRun: (Column, Column) => Column, outCol: String,
-      hotSplits: Seq[(Any, Any)], keepHotCol: Option[String]): DataFrame = {
-    val ord = "__sr_ord"
+    val hotSplits = if (buckets == 1) Nil
+      else detectHotSplits(df, key, ordExpr, buckets, hotThreshold, hotOverride)
     val cur = struct(carryCols: _*)
-    if (hotSplits.isEmpty) {
-      val plain = singleLevelRuns(df.withColumn(ord, ordExpr.cast("double")),
-        key, col(ord) +: tieCols, cur, newRun, outCol).drop(ord)
-      keepHotCol.fold(plain)(h => plain.withColumn(h, lit(false)))
-    } else saltedRuns(df, key, hotSplits, ordExpr, tieCols, cur, newRun,
-      outCol, keepHotCol)
+    if (hotSplits.isEmpty)
+      singleLevelRuns(df.withColumn(srOrd, ordExpr.cast("double")),
+        key, col(srOrd) +: tieCols, cur, newRun, outCol).drop(srOrd)
+    else saltedRuns(df, key, hotSplits, ordExpr, tieCols, cur, newRun, outCol)
   }
 
-  /** Per-key 1-based row numbers in the one-exchange salted shape —
-    * the always-true-newRun special case of [[numberedWithSplits]]
-    * with the machinery that case never needs stripped out:
-    * `row_number()` instead of lag + carry-struct + running sum (one
-    * window function, no struct projection), and a HASH-aggregable
-    * summary (count + flags) instead of the min_by/max_by struct
-    * SortAggregate — boundary repair for plain numbering is just the
-    * running count of preceding buckets (a run never merges). The
-    * summary aggregates the exchange DIRECTLY (not the windowed
-    * frame), so its branch skips the window evaluation entirely.
+  /** Per-key 1-based row numbers over the [[bucketed]] exchange for a
+    * non-empty `hotSplits` — the always-true-newRun special case of
+    * [[saltedRuns]] with the machinery that case never needs stripped
+    * out: `row_number()` instead of lag + carry-struct + running sum
+    * (one window function, no struct projection), and a HASH-aggregable
+    * count summary instead of the min_by/max_by struct SortAggregate —
+    * boundary repair for plain numbering is just the running count of
+    * preceding buckets (a run never merges). The summary aggregates the
+    * exchange directly, so its branch skips the window evaluation.
     */
-  private[graft] def numberedRowsWithSplits(df: DataFrame, key: String,
+  private def numberedRowsWithSplits(df: DataFrame, key: String,
       ordExpr: Column, tieCols: Seq[Column], outCol: String,
-      hotSplits: Seq[(Any, Any)], keepHotCol: Option[String]): DataFrame = {
-    val ord = "__sr_ord"
-    val bkt = "__sr_b"
-    if (hotSplits.isEmpty) {
-      val w = Window.partitionBy(col(key))
-        .orderBy((col(ord) +: tieCols): _*)
-      val plain = df.withColumn(ord, ordExpr.cast("double"))
-        .repartition(GlobalRank.rangeWidth(df), col(key))
-        .withColumn(outCol, row_number().over(w).cast("long"))
-        .drop(ord)
-      return keepHotCol.fold(plain)(h => plain.withColumn(h, lit(false)))
-    }
-    val spark = df.sparkSession
-    val ordCols = col(ord) +: tieCols
-    val keyType = df.schema(key).dataType
-    val splitsDf = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(hotSplits.map { case (k, qs) =>
-        org.apache.spark.sql.Row(k, qs) }).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(key, keyType),
-        org.apache.spark.sql.types.StructField("__sr_qs",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-    val withB = df.withColumn(ord, ordExpr.cast("double"))
-      .join(broadcast(splitsDf), Seq(key), "left")
-      .withColumn(bkt,
-        coalesce(size(filter(col("__sr_qs"), v => v <= col(ord))), lit(0)))
-      .drop("__sr_qs")
-    val pinned = withB.repartition(GlobalRank.rangeWidth(df), col(key), col(bkt))
-    val w1 = Window.partitionBy(col(key), col(bkt)).orderBy(ordCols: _*)
-    val isHot = coalesce(
-      col(key).isInCollection(hotSplits.map(_._1)), lit(false))
-    val summ = pinned.groupBy(col(key), col(bkt))
-      .agg(count(lit(1)).as("__sr_n"),
-        max(when(isHot, lit(1)).otherwise(lit(0))).as("__sr_ih"),
-        pruneGuard(df).as("__sr_guard"))
-      // identity guard filter — see [[pruneGuard]]
-      .filter(col("__sr_ih") === 1 && col("__sr_guard").isNotNull)
-      .drop("__sr_ih", "__sr_guard")
-    val w2 = Window.partitionBy(col(key)).orderBy(col(bkt))
+      hotSplits: Seq[(Any, Any)]): DataFrame = {
+    val pinned = bucketed(df, key, hotSplits, ordExpr)
+    val w1 = Window.partitionBy(col(key), col(srBkt))
+      .orderBy((col(srOrd) +: tieCols): _*)
+    val summ = pinned.filter(isHot(key, hotSplits.map(_._1)))
+      .groupBy(col(key), col(srBkt))
+      .agg(count(lit(1)).as("__sr_n"))
+    val w2 = Window.partitionBy(col(key)).orderBy(col(srBkt))
     val fix = summ
       .withColumn("__sr_base", coalesce(sum(col("__sr_n")).over(
         w2.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col(key), col(bkt), col("__sr_base"))
-    val joined = pinned
+      .select(col(key), col(srBkt), col("__sr_base"))
+    pinned
       .withColumn("__sr_lv", row_number().over(w1).cast("long"))
-      .join(broadcast(fix), Seq(key, bkt), "left")
+      .join(broadcast(fix), Seq(key, srBkt), "left")
       .withColumn(outCol, coalesce(col("__sr_base"), lit(0L)) + col("__sr_lv"))
-    keepHotCol.fold(joined)(h =>
-        joined.withColumn(h, col("__sr_base").isNotNull))
-      .drop(bkt, ord, "__sr_lv", "__sr_base")
+      .drop(srBkt, srOrd, "__sr_lv", "__sr_base")
   }
 
   /** A sliding ROWS-frame window aggregate —
@@ -403,47 +300,27 @@ object SaltedRuns {
       part.repartition(GlobalRank.rangeWidth(part), col(key))
         .withColumn(outCol, aggFn(w))
     }
-    // hot keys AND their splits from ONE 1% sample scan (the pre-r19
-    // shape probed twice: detectHotKeys here + detectHotSplits inside
-    // the numbered call on the hot slice)
+    // hot keys AND their splits from ONE 1% sample scan
     val hotSplits = detectHotSplits(df, key, ordExpr, buckets = 16,
       hotThreshold, hotOverride)
     if (hotSplits.isEmpty) plain(df)
     else {
-      // ONE SCAN (r19; VERDICT r18 #2 — the last family member on the
-      // pre-r18 two-branch shape, which filtered the corpus twice and
-      // re-executed `numbered` for the hot slice): EVERY row — cold
-      // keys included — takes the per-key row number from ONE
-      // [[numbered]] pass (always-true run predicate ⇒ run number =
-      // row number; cold keys ride its constant bucket 0, so their
-      // numbering window IS the plain per-key window). Chunks then
-      // derive from the row number: hot keys get dense `chunkSize`
-      // chunks, cold keys the constant chunk 0 — whose (key, 0) ROWS
-      // window is exactly the plain single-level frame — and each hot
-      // chunk's last k rows replicate into the next chunk as
-      // context-only rows, same exactness argument as before. The
-      // hotness carrier is the repair join's match flag
-      // (keepHotCol), NOT isInCollection(key): the context filter
-      // must not be splittable into a key predicate Catalyst would
-      // push below the numbering exchange and fork it (the __sr_ih
-      // lesson, q_scd2 62.5 s vs 15.4). Cost shape: the one (key,
-      // bucket) numbering exchange + one (key, chunk) exchange for
-      // the frame evaluation; base and context are two consumers of
-      // the numbering exchange (ReuseExchange — window re-evaluates
-      // over shuffle files, the scan never re-executes).
+      // ONE SCAN: every row takes its per-key row number from one
+      // numbering pass (cold keys ride its constant bucket 0). Hot keys
+      // then get dense `chunkSize` chunks of the row number, cold keys
+      // the constant chunk 0 — whose (key, 0) ROWS window is exactly
+      // the plain single-level frame — and each hot chunk's last k rows
+      // replicate into the next chunk as context-only rows. Base and
+      // context are two consumers of the numbering exchange; the
+      // (key, chunk) exchange evaluates the frames.
       val rn = "__sr_rn"; val ck = "__sr_ck"; val ctx = "__sr_ctx"
-      val ih = "__sr_ihot"
-      val rnDf = numberedRowsWithSplits(df, key, ordExpr, tieCols, rn,
-        hotSplits, keepHotCol = Some(ih))
-      val base = rnDf
-        .withColumn(ck, when(col(ih),
+      val hot = isHot(key, hotSplits.map(_._1))
+      val base = numberedRowsWithSplits(df, key, ordExpr, tieCols, rn, hotSplits)
+        .withColumn(ck, when(hot,
           floor((col(rn) - 1) / lit(chunkSize))).otherwise(lit(0L)))
         .withColumn(ctx, lit(false))
-      // single non-splittable predicate: cold rows read -1 (never a
-      // context candidate; chunkSize > k keeps the bound positive)
       val context = base
-        .filter(when(col(ih), (col(rn) - 1) % lit(chunkSize))
-          .otherwise(lit(-1L)) >= lit(chunkSize - k))
+        .filter(hot && (col(rn) - 1) % lit(chunkSize) >= lit(chunkSize - k))
         .withColumn(ck, col(ck) + 1)
         .withColumn(ctx, lit(true))
       val w1 = Window.partitionBy(col(key), col(ck)).orderBy(col(rn))
@@ -452,7 +329,7 @@ object SaltedRuns {
         .repartition(GlobalRank.rangeWidth(df), col(key), col(ck))
         .withColumn(outCol, aggFn(w1))
         .filter(!col(ctx))
-        .drop(rn, ck, ctx, ih)
+        .drop(rn, ck, ctx)
     }
   }
 
@@ -476,19 +353,16 @@ object SaltedRuns {
       df.repartition(GlobalRank.rangeWidth(df), col(key))
         .withColumn(outCol, lead(valueCol, 1).over(wPlain))
     } else {
-      // ONE SCAN, ONE EXCHANGE (r18, the [[chunkedCarry]] shape):
-      // every row rides one (key, chunk) exchange — cold keys (nulls
-      // included: isInCollection is null for a null key, coalesced
-      // cold) take the CONSTANT chunk 0, so their window IS the plain
-      // per-key lead; hot keys chunk by seqCol ranges. The pre-r18
-      // shape filtered the input twice (cold + hot branches) and
-      // localCheckpointed the hot slice.
-      val isHot = coalesce(col(key).isInCollection(hot), lit(false))
+      // ONE SCAN, ONE EXCHANGE, behind a prune barrier like
+      // [[bucketed]]'s: every row rides one (key, chunk) exchange —
+      // cold keys (nulls included) take the CONSTANT chunk 0, so their
+      // window IS the plain per-key lead; hot keys chunk by seqCol
+      // ranges.
       val ck = "__sr_ck"
-      val withCk = df.withColumn(ck,
-        when(isHot, floor(seqCol / lit(chunkSize))).otherwise(lit(0L)))
-      // width from the INPUT frame — see [[saltedRuns]]
-      val pinned = withCk.repartition(GlobalRank.rangeWidth(df), col(key), col(ck))
+      val pinned = GraftBridge.barrier(df
+        .withColumn(ck, when(isHot(key, hot), floor(seqCol / lit(chunkSize)))
+          .otherwise(lit(0L)))
+        .repartition(GlobalRank.rangeWidth(df), col(key), col(ck)))
       val w1 = Window.partitionBy(col(key), col(ck)).orderBy(seqCol)
       // lead rides struct(valueCol): the struct is non-null iff a NEXT
       // ROW exists, so the boundary coalesce below dispatches on
@@ -498,20 +372,9 @@ object SaltedRuns {
       // value.
       val led = pinned
         .withColumn("__sr_ld", lead(struct(valueCol.as("v")), 1).over(w1))
-      // O(chunks) rows per hot key. Hot keys are kept via a filter on
-      // an AGGREGATE OUTPUT (__sr_ih) — a grouping-key filter would
-      // push below the repartition and fork the exchange into a
-      // hot-only copy re-executing the whole upstream (see
-      // [[saltedRuns]]); this way the agg rides the (key, chunk)
-      // clustering and ReuseExchange shares the one shuffle with the
-      // window consumer.
-      val cs = pinned.groupBy(col(key), col(ck))
-        .agg(min_by(struct(valueCol.as("v")), seqCol).as("__sr_cf"),
-          max(when(isHot, lit(1)).otherwise(lit(0))).as("__sr_ih"),
-          pruneGuard(df).as("__sr_guard"))
-        // identity filter keeping the column-pruning guard alive — see
-        // [[pruneGuard]]
-        .filter(col("__sr_ih") === 1 && col("__sr_guard").isNotNull)
+      // O(chunks) rows per hot key
+      val cs = pinned.filter(isHot(key, hot)).groupBy(col(key), col(ck))
+        .agg(min_by(struct(valueCol.as("v")), seqCol).as("__sr_cf"))
       val w2 = Window.partitionBy(col(key)).orderBy(col(ck))
       val nf = cs.withColumn("__sr_nf", lead(col("__sr_cf"), 1).over(w2))
         .select(col(key), col(ck), col("__sr_nf"))
@@ -551,7 +414,7 @@ object SaltedRuns {
           .collect().map(_.get(0)).toSeq
       }.filter(_ != null)
       if (hot.isEmpty) Nil
-      else s.filter(coalesce(col(key).isInCollection(hot), lit(false)))
+      else s.filter(isHot(key, hot))
         .groupBy(col(key))
         .agg(percentile_approx(col("__sr_o"), probes, lit(10000)).as("__sr_qs"))
         .collect().map(r => (r.get(0), r.get(1))).toSeq
@@ -575,25 +438,18 @@ object SaltedRuns {
     * only needs monotonicity, within-bucket ordering stays on the
     * caller's exact `orderCols`.
     *
-    * ONE SCAN, ONE EXCHANGE (r18): the previous shape filtered the
-    * corpus TWICE (cold + hot branches, each re-executing the upstream
-    * scan — for AsofJoin the full two-sided union) plus the probe's
-    * sample scan, and localCheckpointed the hot slice twice; under
-    * cold-page-cache / slow-storage windows the gated as-of read
-    * 16–158 s across four sessions on identical data while the ungated
-    * plan held ~18 s (the r18 stage profile pinned the swing to the
-    * repeated corpus scans). Now EVERY row rides one (key, bucket)
-    * exchange: cold keys take bucket 0 from the broadcast LEFT join's
-    * null splits — a constant bucket, so their window IS the plain
-    * per-key carry — while hot rows bucket by the sampled splits. The
-    * boundary-repair summary is computed from the HOT rows only, as a
-    * second consumer of the SAME exchange (ReuseExchange: scan+shuffle
-    * execute once; only the window re-evaluates, over hot rows), and
-    * the ≤64×buckets carry-in frame broadcast-LEFT-joins back — cold
-    * rows miss it and keep their exact local carry. Exact either way:
-    * carry-forward couples a row only to the latest preceding
-    * non-null, which lives either in its own bucket (local wins) or in
-    * a preceding bucket (the summary's carry-in).
+    * ONE SCAN, ONE EXCHANGE (r18): every row rides the [[bucketed]]
+    * exchange — the previous two-branch shape re-executed the upstream
+    * scan (for AsofJoin the full two-sided union) once per branch, and
+    * under cold-page-cache windows the gated as-of read 16–158 s
+    * across four sessions on identical data while the ungated plan
+    * held ~18 s. The carry-in summary over the hot rows is a second
+    * consumer of the same exchange, and its ≤64×buckets frame
+    * broadcast-LEFT-joins back — cold rows miss it and keep their
+    * exact local carry. Exact either way: carry-forward couples a row
+    * only to the latest preceding non-null, which lives either in its
+    * own bucket (local wins) or in a preceding bucket (the summary's
+    * carry-in).
     */
   def chunkedCarry(df: DataFrame, key: String, ordExpr: Column,
       orderCols: Seq[Column], carry: Seq[(String, String)],
@@ -611,74 +467,34 @@ object SaltedRuns {
     val hotSplits = detectHotSplits(df, key, ordExpr, buckets, hotThreshold,
       hotOverride)
     if (hotSplits.isEmpty) return plain(df)
-    val spark = df.sparkSession
-    val ord = "__sr_ord"
-    val bkt = "__sr_b"
-    val keyType = df.schema(key).dataType
-    val splitsDf = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(hotSplits.map { case (k, qs) =>
-        org.apache.spark.sql.Row(k, qs) }).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(key, keyType),
-        org.apache.spark.sql.types.StructField("__sr_qs",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-    // LEFT join: cold keys (and hot keys whose sampled ords were all
-    // null) get null splits — filter() over a null array yields null,
-    // so their bucket coalesces to the constant 0
-    val withB = df.withColumn(ord, ordExpr.cast("double"))
-      .join(broadcast(splitsDf), Seq(key), "left")
-      .withColumn(bkt,
-        coalesce(size(filter(col("__sr_qs"), v => v <= col(ord))), lit(0)))
-      .drop("__sr_qs")
-    // explicit width (REPARTITION_BY_NUM, exempt from AQE coalescing):
-    // the ONE exchange of the whole operator. Width from the INPUT
-    // frame — rangeWidth(withB) would see the broadcast join's
-    // multiplied sizeInBytes estimate and saturate the 1024 cap
-    // (measured: 1024-task window stages vs the plain path's 345 on
-    // the same bytes — tiny-task scheduling overhead, contention-
-    // amplified)
-    val pinned = withB.repartition(GlobalRank.rangeWidth(df), col(key), col(bkt))
-    val w1 = Window.partitionBy(col(key), col(bkt)).orderBy(orderCols: _*)
+    val pinned = bucketed(df, key, hotSplits, ordExpr)
+    val w1 = Window.partitionBy(col(key), col(srBkt)).orderBy(orderCols: _*)
     val w1f = w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // __sr_rn rides the SAME window pass as the carries (one sort) so
-    // the summary below can aggregate the IDENTICAL windowed frame the
-    // final join consumes — the pre-r19 shape filtered isHot on pinned
-    // before its own window, a grouping-key filter that pushed below
-    // the repartition and FORKED the exchange into a hot-only copy
-    // re-executing the whole upstream (the residual "2 scans" of the
-    // r18 as-of A/B). Cost: cold rows now ride the summary aggregate
-    // too (discarded post-agg via the __sr_ih agg-output filter — the
-    // measured saltedRuns trade).
+    // __sr_rn rides the SAME window pass as the carries (one sort) and
+    // orders the summary's pick of each bucket's last carry
     val localed = carry.foldLeft(
       pinned.withColumn("__sr_rn", row_number().over(w1))) {
       case (d, (in, out)) =>
         d.withColumn(out, last(col(in), ignoreNulls = true).over(w1f))
     }
-    val isHot = coalesce(
-      col(key).isInCollection(hotSplits.map(_._1)), lit(false))
     val aggs = carry.map { case (_, out) =>
-      max_by(col(out), col("__sr_rn")).as(s"__sr_l_$out") } ++ Seq(
-      max(when(isHot, lit(1)).otherwise(lit(0))).as("__sr_ih"),
-      pruneGuard(df).as("__sr_guard"))
-    val summ = localed.groupBy(col(key), col(bkt))
+      max_by(col(out), col("__sr_rn")).as(s"__sr_l_$out") }
+    val summ = localed.filter(isHot(key, hotSplits.map(_._1)))
+      .groupBy(col(key), col(srBkt))
       .agg(aggs.head, aggs.tail: _*)
-      // identity guard filter — see [[pruneGuard]]
-      .filter(col("__sr_ih") === 1 && col("__sr_guard").isNotNull)
-      .drop("__sr_ih", "__sr_guard")
-    val w2 = Window.partitionBy(col(key)).orderBy(col(bkt))
+    val w2 = Window.partitionBy(col(key)).orderBy(col(srBkt))
       .rowsBetween(Window.unboundedPreceding, -1)
     val fix = carry.foldLeft(summ) { case (d, (_, out)) =>
       d.withColumn(s"__sr_ci_$out",
         last(col(s"__sr_l_$out"), ignoreNulls = true).over(w2))
-    }.select((col(key) +: col(bkt) +: carry.map { case (_, out) =>
+    }.select((col(key) +: col(srBkt) +: carry.map { case (_, out) =>
       col(s"__sr_ci_$out") }): _*)
     // broadcast LEFT: hot keys × buckets rows — bounded by the 64-key
     // cap; cold rows miss and keep their exact local carry
-    carry.foldLeft(localed.join(broadcast(fix), Seq(key, bkt), "left")) {
+    carry.foldLeft(localed.join(broadcast(fix), Seq(key, srBkt), "left")) {
       case (d, (_, out)) =>
         d.withColumn(out, coalesce(col(out), col(s"__sr_ci_$out")))
-    }.drop((Seq(bkt, ord, "__sr_rn") ++ carry.map { case (_, out) =>
+    }.drop((Seq(srBkt, srOrd, "__sr_rn") ++ carry.map { case (_, out) =>
       s"__sr_ci_$out" }): _*)
   }
 }

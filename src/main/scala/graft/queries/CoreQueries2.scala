@@ -531,53 +531,35 @@ object CoreQueries2 {
     // even that job — per-key cardinality only shrinks under subsets,
     // so a superset list is a safe over-approximation (false positives
     // pay the small repair overhead on <= 64 keys; exactness holds on
-    // both paths). History of the shape: r14 split per OPERATOR and
-    // unioned between them (measured-rejected: mixed partitionings
-    // forced a full-corpus agg re-exchange, +205 MB / ~4 s on cold
-    // sf10skew rows); r14-r17 split the whole PIPELINE per branch
-    // (cold kept the fused one-exchange plan, at the price of
-    // executing the source scan once per branch); r18 runs one
-    // pipeline over one scan — see the note inside `pipeline`.
+    // both paths). The pipeline runs once over the whole frame:
+    // numbered and chunkedLead each keep cold and hot keys in one
+    // (key, bucket) exchange over one scan.
     val hot = hotOverride.getOrElse(
       graft.operators.SaltedRuns.detectHotKeys(src, "o_custkey"))
-    def pipeline(part: DataFrame, hotList: Seq[Any]): DataFrame = {
-      // r18: SaltedRuns.numbered/chunkedLead are ONE-SCAN, ONE-EXCHANGE
-      // internally now (cold keys ride the constant bucket 0 of the
-      // same (key, bucket) exchange the hot keys split over), so the
-      // pipeline runs ONCE over the full frame — the previous top-level
-      // cold/hot split (which kept the cold branch's window+agg+lead
-      // fused on one hash(key) exchange at the price of executing the
-      // source scan twice) is gone. The trade moves the cold mass's
-      // agg onto a (runs-grain, partial-agg'd) re-exchange and in
-      // return deletes a full corpus scan — A/B'd at sf10skew, see
-      // OPTIMIZATION_r18.md.
-      val runs = graft.operators.SaltedRuns.numbered(
-        part, "o_custkey", unix_timestamp($"o_orderdate"), Seq($"o_orderkey"),
-        Seq($"o_orderpriority"),
-        // null-safe (r18, ADVICE r17): =!= yields null for null values,
-        // which falls to otherwise(0) — a null would silently CONTINUE
-        // any run, diverging from applyChanges' <=> run-collapse and
-        // breaking the rebuild-equality contract on a nullable value
-        // column. No-op for the non-null o_orderpriority data.
-        (p, c) => !(p.getField("o_orderpriority") <=> c.getField("o_orderpriority")),
-        "version", buckets = 32, hotOverride = Some(hotList))
-      // hot branch only: pinned exchange under the agg
-      // (REPARTITION_BY_NUM) — the salted runs arrive hash(key, bucket)
-      // partitioned, the agg must re-exchange anyway, and an unpinned
-      // exchange's reads bytes-coalesce to 1 task (the qScd2 lesson)
-      val gIn = if (hotList.nonEmpty)
-        runs.repartition(graft.operators.GlobalRank.rangeWidth(part),
-          $"o_custkey", $"version", $"o_orderpriority")
-      else runs
-      val g = gIn
-        .groupBy($"o_custkey", $"version", $"o_orderpriority")
-        .agg(min(unix_timestamp($"o_orderdate")).as("valid_from_s"),
-          count(lit(1)).as("n_orders"))
-      graft.operators.SaltedRuns.chunkedLead(g, "o_custkey", $"version",
-        $"valid_from_s", "__vt", hotOverride = Some(hotList))
-    }
-    val led = pipeline(src, hot)
-    led
+    val runs = graft.operators.SaltedRuns.numbered(
+      src, "o_custkey", unix_timestamp($"o_orderdate"), Seq($"o_orderkey"),
+      Seq($"o_orderpriority"),
+      // null-safe (r18, ADVICE r17): =!= yields null for null values,
+      // which falls to otherwise(0) — a null would silently CONTINUE
+      // any run, diverging from applyChanges' <=> run-collapse and
+      // breaking the rebuild-equality contract on a nullable value
+      // column. No-op for the non-null o_orderpriority data.
+      (p, c) => !(p.getField("o_orderpriority") <=> c.getField("o_orderpriority")),
+      "version", buckets = 32, hotOverride = Some(hot))
+    // hot path only: pinned exchange under the agg (REPARTITION_BY_NUM)
+    // — the salted runs arrive hash(key, bucket) partitioned, the agg
+    // must re-exchange anyway, and an unpinned exchange's reads
+    // bytes-coalesce to 1 task (the qScd2 lesson)
+    val gIn = if (hot.nonEmpty)
+      runs.repartition(graft.operators.GlobalRank.rangeWidth(src),
+        $"o_custkey", $"version", $"o_orderpriority")
+    else runs
+    val g = gIn
+      .groupBy($"o_custkey", $"version", $"o_orderpriority")
+      .agg(min(unix_timestamp($"o_orderdate")).as("valid_from_s"),
+        count(lit(1)).as("n_orders"))
+    graft.operators.SaltedRuns.chunkedLead(g, "o_custkey", $"version",
+        $"valid_from_s", "__vt", hotOverride = Some(hot))
       .withColumn("valid_to_s", coalesce($"__vt", lit(253402300800L)))
       .select($"o_custkey", $"version", $"o_orderpriority".as("priority"),
         $"valid_from_s", $"valid_to_s", $"n_orders")

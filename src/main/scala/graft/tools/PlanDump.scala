@@ -1,28 +1,30 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
-import graft.SparkEntry
-
-/** Diagnostic: print the executed physical plan of named SparkEntry
-  * queries (PLANS.md upkeep). Usage:
-  * `sbt "runMain graft.tools.PlanDump q_cosine_topk q_roc_auc"`
+/** Diagnostic: run named SparkEntry queries (all of them with no args)
+  * and print each one's final executed physical plan, after AQE has
+  * re-planned it from the runtime stage statistics. Rows are discarded.
+  * Usage: `SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.tools.PlanDump
+  * q_scd2 q_roc_auc"`; SPARK_GRAFT_CPUS sets the local core count.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = GraftSession.builder("graft-plandump", shufflePartitions = cpus)
+      .master(s"local[$cpus]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    args.foreach { name =>
-      var df = SparkEntry.queries(name)(spark, sfDir)
-      df.count() // warm + materialize so AQE finalizes the plan
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
       val t0 = System.nanoTime()
-      df = SparkEntry.queries(name)(spark, sfDir)
-      df.count()
-      println(f"===== $name  warm ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      println(df.queryExecution.executedPlan.toString.take(4000))
+      // execute this frame's own plan, so the printed plan is final
+      df.queryExecution.executedPlan.execute().foreach(_ => ())
+      println(f"===== $name  ${(System.nanoTime() - t0) / 1e9}%.2f s  cores=$cpus")
+      println(df.queryExecution.executedPlan.toString)
     }
     spark.stop()
   }

@@ -256,7 +256,7 @@ class SaltedRunsSpec extends SparkSpec {
 
   test("one-exchange contract: chunkedCarry's hot path reuses its (key, bucket) exchange") {
     // payload column `p` is read by neither the carry nor the order —
-    // exactly the column-pruning fork trigger the guard exists for
+    // exactly the column-pruning fork trigger the prune barrier exists for
     val rows = (1 to 1500).map { i =>
       val key = if (i % 3 == 0) 2L else 1L
       (key, i.toLong, if (i % 5 == 0) Some(i.toDouble) else None, s"payload$i")
@@ -277,5 +277,93 @@ class SaltedRunsSpec extends SparkSpec {
     assert(out.select($"k", $"ts", $"x_c").except(
       expected.select($"k", $"ts", $"x_c")).isEmpty,
       "chunkedCarry diverges from the plain carry window")
+  }
+
+  // The one-exchange contract on the inputs that used to fork it: a
+  // nullable key with null rows, a payload column no operator reads,
+  // and a map-typed column. The frame is read from parquet: an
+  // in-memory frame with a map column plans as LocalRelations whose
+  // map rows never compare equal, so it would reuse no exchange at all.
+  private lazy val forkProne: org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(41)
+    val rows = (1 to 1500).map { i =>
+      val key: Option[Long] =
+        if (i % 40 == 0) None else if (rnd.nextBoolean()) Some(1L) else Some(2L + rnd.nextInt(3))
+      (key, (rnd.nextInt(300) + 1).toLong, i.toLong, s"p${rnd.nextInt(3)}",
+        if (i % 4 == 0) None else Some(rnd.nextInt(100).toDouble),
+        s"payload$i", Map(s"m${i % 7}" -> i))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("saltedruns").resolve("fork").toString
+    rows.toDF("k", "ord", "tie", "v", "x", "p", "m").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def assertOneBucketExchange(out: org.apache.spark.sql.DataFrame,
+      bucketCol: String): Unit = {
+    val plans = shuffleStages(out).map(_.plan)
+    val real = plans.collect {
+      case e: ShuffleExchangeLike if e.outputPartitioning.toString.contains(bucketCol) => e }
+    val reused = plans.collect {
+      case r: ReusedExchangeExec if r.outputPartitioning.toString.contains(bucketCol) => r }
+    assert(real.size == 1,
+      s"expected ONE (key, $bucketCol) data shuffle, got ${real.size}:\n${real.mkString("\n")}")
+    assert(reused.nonEmpty, s"the (key, $bucketCol) exchange must be REUSED, not forked")
+  }
+
+  private def assertSameRows(got: org.apache.spark.sql.DataFrame,
+      expected: org.apache.spark.sql.DataFrame, cols: Seq[String]): Unit = {
+    val g = got.select(cols.map(col): _*)
+    val e = expected.select(cols.map(col): _*)
+    assert(g.count() === e.count(), "row counts differ")
+    assert(g.except(e).isEmpty && e.except(g).isEmpty,
+      "diverges from the single-level window")
+  }
+
+  test("one-exchange contract (nullable key, unread payload, map column): numbered") {
+    val df = forkProne
+    val out = SaltedRuns.numbered(df, "k", $"ord", Seq($"tie"), Seq($"v"),
+      (p, c) => p.getField("v") =!= c.getField("v"), "run",
+      buckets = 8, hotThreshold = 50L)
+    assertOneBucketExchange(out, "__sr_b")
+    val w = Window.partitionBy($"k").orderBy($"ord", $"tie")
+    val expected = df
+      .withColumn("chg", when(lag($"v", 1).over(w).isNull ||
+        lag($"v", 1).over(w) =!= $"v", 1L).otherwise(0L))
+      .withColumn("run", sum($"chg").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    assertSameRows(out, expected, Seq("k", "ord", "tie", "run"))
+  }
+
+  test("one-exchange contract (nullable key, unread payload, map column): chunkedRowsAgg") {
+    val df = forkProne
+    val out = SaltedRuns.chunkedRowsAgg(df, "k", $"ord", Seq($"tie"), k = 3,
+      wd => avg($"x").over(wd), "mavg", chunkSize = 64L, hotThreshold = 50L)
+      .withColumn("mavg", round($"mavg", 9))
+    assertOneBucketExchange(out, "__sr_b")
+    val w = Window.partitionBy($"k").orderBy($"ord", $"tie")
+      .rowsBetween(-3, Window.currentRow)
+    val expected = df.withColumn("mavg", round(avg($"x").over(w), 9))
+    assertSameRows(out, expected, Seq("k", "ord", "tie", "mavg"))
+  }
+
+  test("one-exchange contract (nullable key, unread payload, map column): chunkedLead") {
+    val df = forkProne
+    val out = SaltedRuns.chunkedLead(df, "k", $"tie", $"x", "nxt",
+      chunkSize = 64L, hotThreshold = 50L)
+    assertOneBucketExchange(out, "__sr_ck")
+    val expected = df.withColumn("nxt",
+      lead($"x", 1).over(Window.partitionBy($"k").orderBy($"tie")))
+    assertSameRows(out, expected, Seq("k", "tie", "nxt"))
+  }
+
+  test("one-exchange contract (nullable key, unread payload, map column): chunkedCarry") {
+    val df = forkProne
+    val out = SaltedRuns.chunkedCarry(df, "k", $"ord", Seq($"ord", $"tie"),
+      Seq("x" -> "x_c"), buckets = 8, hotThreshold = 50L)
+    assertOneBucketExchange(out, "__sr_b")
+    val w = Window.partitionBy($"k").orderBy($"ord", $"tie")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val expected = df.withColumn("x_c", last($"x", ignoreNulls = true).over(w))
+    assertSameRows(out, expected, Seq("k", "ord", "tie", "x_c"))
   }
 }
