@@ -33,22 +33,8 @@ object Bench {
     // silently quarters throughput when the env var is unset
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-bench", shufflePartitions = cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // decouple shuffle width from data size (see GraftSession):
-      // fixed-width shuffles spill-cascade one decade up (sf10)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
-      // cached plans coalesce like any shuffle (see GraftSession)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (64L * 1024 * 1024).toString)
-      // Tables.t's TIMESTAMP_NTZ→TIMESTAMP cast is digit-preserving
-      // only under UTC; without this a non-UTC JVM default shifts
-      // instants and changes filter row counts vs Verify.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       // Hadoop vectored IO bypasses local-FS statistics (probed r16:
       // a 600k-row column scan reported 17.8 KB read), so the IO line
       // would carry footer bytes only. Off by default IN THE BENCH
@@ -57,7 +43,6 @@ object Bench {
       // noise (see SCALING.md r16).
       .config("spark.hadoop.parquet.hadoop.vectored.io.enabled",
         sys.env.getOrElse("SPARK_GRAFT_VECTORED_IO", "false"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.entry(spark).count() // warm up the session (JIT, codegen, FS)

@@ -1,6 +1,6 @@
 package graft.features
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Fitted feature-engineering pipeline, Spark-first re-expression of the
@@ -159,9 +159,16 @@ object FeaturePipeline {
   /** Fit all requested statistics on the training data.
     *
     * Cost model: one wide aggregation for numeric stats (single scan,
-    * partial aggregation map-side), one tiny groupBy per mode column,
-    * one groupBy per one-hot column (k rows each). Everything collected
-    * is O(columns + categories), never O(rows).
+    * partial aggregation map-side), one melted sort for the exact
+    * quartiles, one tiny groupBy per mode column, one groupBy per one-hot
+    * column (k rows each), one aggregation for the variances. Everything
+    * collected is O(columns + categories), never O(rows).
+    *
+    * Those stat families read only `train`, never each other, so they
+    * run as [[graft.Lanes]]: on a small training set each is a few
+    * one-task jobs, and run one after another they would leave most
+    * cores idle. The scaler refit needs the imputation stats, so it runs
+    * after them, its aggregate and its quartiles again as two lanes.
     */
   def fit(train: DataFrame, spec: FeaturePipelineSpec): FittedFeaturePipeline = {
     val numCols: Seq[String] =
@@ -178,71 +185,22 @@ object FeaturePipeline {
       (spec.imputers.filter(_.strategy == Imputation.Median).map(_.col) ++
         spec.scalers.filter(_.kind == ScalerKind.Robust).map(_.col)).toSet
 
-    // quantiles: exactQuantiles=true (the spec DEFAULT) uses
-    // GlobalRank.exactQuantilesPerColumn — ALL consuming columns'
-    // quartiles from ONE melted composite-key sort (never one pass per
-    // column, and never Spark's exact `percentile`, whose aggregation
-    // buffer holds every value — a single-executor OOM on a 100 TB
-    // fit); exactQuantiles=false keeps quantiles inside the wide agg
-    // via approx_percentile (one scan total — the wide-feature-set
-    // trade)
-    val numStats: Map[String, NumStats] =
-      if (numCols.isEmpty) Map.empty
-      else {
-        val aggs = numCols.flatMap { c =>
-          Seq(avg(col(c)).as(s"${c}__mean"), stddev_samp(col(c)).as(s"${c}__std"),
-            min(col(c)).cast("double").as(s"${c}__min"), max(col(c)).cast("double").as(s"${c}__max")) ++
-            (if (spec.exactQuantiles || !quantConsumers(c)) Nil
-             else Seq(expr(s"approx_percentile(`$c`, array(0.25, 0.5, 0.75), 10000)").as(s"${c}__q")))
-        }
-        val row = train.agg(aggs.head, aggs.tail: _*).head()
-        val qCols = numCols.filter(quantConsumers)
-        val exactQs: Map[String, Array[Double]] =
-          if (spec.exactQuantiles && qCols.nonEmpty)
-            graft.operators.GlobalRank.exactQuantilesPerColumn(
-              train, qCols, Seq(0.25, 0.5, 0.75))
-          else Map.empty
-        val noQ = IndexedSeq(Double.NaN, Double.NaN, Double.NaN)
-        val quantiles: String => IndexedSeq[Double] = c =>
-          if (!quantConsumers(c)) noQ
-          else if (spec.exactQuantiles) exactQs(c).toIndexedSeq
-          else row.getAs[scala.collection.Seq[Double]](s"${c}__q").toIndexedSeq
-        numCols.map { c =>
-          val q = quantiles(c)
-          c -> NumStats(row.getAs[Double](s"${c}__mean"), row.getAs[Double](s"${c}__std"),
-            row.getAs[Double](s"${c}__min"), row.getAs[Double](s"${c}__max"),
-            q(0), q(1), q(2))
-        }.toMap
-      }
-
-    // Deterministic mode: highest count, ties broken by smallest value.
     val modeCols = spec.imputers.filter(_.strategy == Imputation.Mode).map(_.col).distinct
-    val modes: Map[String, String] = modeCols.map { c =>
-      val top = train.filter(col(c).isNotNull).groupBy(col(c)).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col(c).asc).head()
-      c -> top.get(0).toString
-    }.toMap
-
-    // One-hot category inventories with frequency-based infrequent grouping.
-    val catInfo: Map[String, (Seq[String], Seq[String])] = spec.oneHots.map { oh =>
-      val counts = train.filter(col(oh.col).isNotNull)
-        .groupBy(col(oh.col)).agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.get(0).toString, r.getAs[Long]("n")))
-      val total = counts.map(_._2).sum.toDouble
-      val (freq, infreq) = counts.partition { case (_, n) => n / total >= oh.minFrequency }
-      oh.col -> ((freq.map(_._1).sorted.toSeq, infreq.map(_._1).sorted.toSeq))
-    }.toMap
-
-    // Variance audit for the selector. Note sklearn's VarianceThreshold
-    // uses population variance; we use var_samp (documented divergence —
-    // it is a near-zero filter, the 1/(n-1) factor is immaterial).
-    val variances: Map[String, Double] =
-      if (spec.varianceCols.isEmpty) Map.empty
-      else {
-        val aggs = spec.varianceCols.map(c => var_samp(col(c)).as(c))
-        val row = train.agg(aggs.head, aggs.tail: _*).head()
-        spec.varianceCols.map(c => c -> row.getAs[Double](c)).toMap
-      }
+    // each lane returns the update that records its family's stats
+    type Update = FittedFeaturePipeline => FittedFeaturePipeline
+    val raw = graft.Lanes.all(
+      Seq[() => Update](
+        () => { val s = numericStats(train, numCols, quantConsumers, spec.exactQuantiles)
+          _.copy(numStats = s) },
+        () => { val v = variances(train, spec.varianceCols); _.copy(variances = v) }) ++
+        modeCols.map(c => () => { val m = mode(train, c); (f: FittedFeaturePipeline) =>
+          f.copy(modes = f.modes + (c -> m)) }) ++
+        spec.oneHots.map(oh => () => { val (freq, infreq) = inventory(train, oh)
+          (f: FittedFeaturePipeline) => f.copy(categories = f.categories + (oh.col -> freq),
+            infrequent = f.infrequent + (oh.col -> infreq)) })
+    ).foldLeft(FittedFeaturePipeline(spec, Map.empty, Map.empty, Map.empty, Map.empty,
+      Map.empty, Map.empty))((f, update) => update(f))
+    val numStats = raw.numStats
 
     // Scaler stats must reflect the IMPUTED distribution for columns
     // that also have an imputer (sklearn Pipeline fit order: the scaler
@@ -253,7 +211,7 @@ object FeaturePipeline {
       i.col -> (i.strategy match {
         case Imputation.Mean   => lit(numStats(i.col).mean)
         case Imputation.Median => lit(numStats(i.col).median)
-        case Imputation.Mode   => lit(modes(i.col)).cast(train.schema(i.col).dataType)
+        case Imputation.Mode   => lit(raw.modes(i.col)).cast(train.schema(i.col).dataType)
         case Imputation.Zero   => lit(0.0)
       })
     }.toMap
@@ -282,35 +240,77 @@ object FeaturePipeline {
           val imputed = imputeBy.get(c).map(r => coalesce(col(c), r)).getOrElse(col(c))
           winsorBy.get(c).map(_(imputed)).getOrElse(imputed).as(c)
         }: _*)
-        val aggs = refitCols.flatMap { c =>
-          Seq(avg(col(c)).as(s"${c}__mean"), stddev_samp(col(c)).as(s"${c}__std"),
-            min(col(c)).cast("double").as(s"${c}__min"), max(col(c)).cast("double").as(s"${c}__max")) ++
-            (if (spec.exactQuantiles || !quantConsumers(c)) Nil
-             else Seq(expr(s"approx_percentile(`$c`, array(0.25, 0.5, 0.75), 10000)").as(s"${c}__q")))
-        }
-        val row = proj.agg(aggs.head, aggs.tail: _*).head()
-        val qCols = refitCols.filter(quantConsumers)
-        val exactQs: Map[String, Array[Double]] =
-          if (spec.exactQuantiles && qCols.nonEmpty)
-            graft.operators.GlobalRank.exactQuantilesPerColumn(
-              proj, qCols, Seq(0.25, 0.5, 0.75))
-          else Map.empty
-        val noQ = IndexedSeq(Double.NaN, Double.NaN, Double.NaN)
-        val quantiles: String => IndexedSeq[Double] = c =>
-          if (!quantConsumers(c)) noQ
-          else if (spec.exactQuantiles) exactQs(c).toIndexedSeq
-          else row.getAs[scala.collection.Seq[Double]](s"${c}__q").toIndexedSeq
-        numStats ++ refitCols.map { c =>
-          val q = quantiles(c)
-          c -> NumStats(row.getAs[Double](s"${c}__mean"), row.getAs[Double](s"${c}__std"),
-            row.getAs[Double](s"${c}__min"), row.getAs[Double](s"${c}__max"),
-            q(0), q(1), q(2))
-        }.toMap
+        numStats ++ numericStats(proj, refitCols, quantConsumers, spec.exactQuantiles)
       }
 
-    FittedFeaturePipeline(spec, numStats, modes,
-      catInfo.map { case (k, v) => k -> v._1 },
-      catInfo.map { case (k, v) => k -> v._2 },
-      variances, scaleStats, winsorBounds)
+    raw.copy(scaleStats = scaleStats, winsorBounds = winsorBounds)
   }
+
+  /** mean/std/min/max of `cols` from one wide aggregation, plus the
+    * quartiles of the columns in `quantConsumers`, NaN for the rest.
+    * exact=true (the spec DEFAULT) uses
+    * GlobalRank.exactQuantilesPerColumn — ALL consuming columns'
+    * quartiles from ONE melted composite-key sort (never one pass per
+    * column, and never Spark's exact `percentile`, whose aggregation
+    * buffer holds every value — a single-executor OOM on a 100 TB fit),
+    * run as a lane beside the aggregation; exact=false keeps quantiles
+    * inside the wide agg via approx_percentile (one scan total — the
+    * wide-feature-set trade).
+    */
+  private def numericStats(df: DataFrame, cols: Seq[String], quantConsumers: Set[String],
+      exact: Boolean): Map[String, NumStats] =
+    if (cols.isEmpty) Map.empty
+    else {
+      val aggs = cols.flatMap { c =>
+        Seq(avg(col(c)).as(s"${c}__mean"), stddev_samp(col(c)).as(s"${c}__std"),
+          min(col(c)).cast("double").as(s"${c}__min"), max(col(c)).cast("double").as(s"${c}__max")) ++
+          (if (exact || !quantConsumers(c)) Nil
+           else Seq(expr(s"approx_percentile(`$c`, array(0.25, 0.5, 0.75), 10000)").as(s"${c}__q")))
+      }
+      val qCols = cols.filter(quantConsumers)
+      val Seq(row: Row, exactQs: Map[String, Array[Double]] @unchecked) = graft.Lanes.all(Seq(
+        () => df.agg(aggs.head, aggs.tail: _*).head(),
+        () => if (exact && qCols.nonEmpty)
+          graft.operators.GlobalRank.exactQuantilesPerColumn(df, qCols, Seq(0.25, 0.5, 0.75))
+        else Map.empty[String, Array[Double]]))
+      val noQ = IndexedSeq(Double.NaN, Double.NaN, Double.NaN)
+      cols.map { c =>
+        val q =
+          if (!quantConsumers(c)) noQ
+          else if (exact) exactQs(c).toIndexedSeq
+          else row.getAs[scala.collection.Seq[Double]](s"${c}__q").toIndexedSeq
+        c -> NumStats(row.getAs[Double](s"${c}__mean"), row.getAs[Double](s"${c}__std"),
+          row.getAs[Double](s"${c}__min"), row.getAs[Double](s"${c}__max"),
+          q(0), q(1), q(2))
+      }.toMap
+    }
+
+  /** Deterministic mode: highest count, ties broken by smallest value. */
+  private def mode(train: DataFrame, c: String): String =
+    train.filter(col(c).isNotNull).groupBy(col(c)).agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col(c).asc).head().get(0).toString
+
+  /** One-hot category inventory with frequency-based infrequent
+    * grouping: (kept categories, grouped categories), each sorted.
+    */
+  private def inventory(train: DataFrame, oh: OneHotSpec): (Seq[String], Seq[String]) = {
+    val counts = train.filter(col(oh.col).isNotNull)
+      .groupBy(col(oh.col)).agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.get(0).toString, r.getAs[Long]("n")))
+    val total = counts.map(_._2).sum.toDouble
+    val (freq, infreq) = counts.partition { case (_, n) => n / total >= oh.minFrequency }
+    (freq.map(_._1).sorted.toSeq, infreq.map(_._1).sorted.toSeq)
+  }
+
+  /** Variance audit for the selector. Note sklearn's VarianceThreshold
+    * uses population variance; we use var_samp (documented divergence —
+    * it is a near-zero filter, the 1/(n-1) factor is immaterial).
+    */
+  private def variances(train: DataFrame, cols: Seq[String]): Map[String, Double] =
+    if (cols.isEmpty) Map.empty
+    else {
+      val aggs = cols.map(c => var_samp(col(c)).as(c))
+      val row = train.agg(aggs.head, aggs.tail: _*).head()
+      cols.map(c => c -> row.getAs[Double](c)).toMap
+    }
 }

@@ -16,14 +16,16 @@ import graft.operators.AsofJoin
 object FeatureStore {
 
   /** Write features (all columns minus label) and target (pk + label)
-    * with an event-timestamp column, each as parquet under `dir`.
+    * with an event-timestamp column, each as parquet under `dir`. The
+    * two writes are independent scans of `df`, so they run as
+    * [[graft.Lanes]].
     */
   def saveOffline(df: DataFrame, pkCol: String, labelCol: String,
-      tsCol: String, dir: String): Unit = {
-    df.drop(labelCol).write.mode("overwrite").parquet(s"$dir/features.parquet")
-    df.select(col(pkCol), col(labelCol), col(tsCol))
-      .write.mode("overwrite").parquet(s"$dir/target.parquet")
-  }
+      tsCol: String, dir: String): Unit =
+    graft.Lanes.all(Seq(
+      () => df.drop(labelCol).write.mode("overwrite").parquet(s"$dir/features.parquet"),
+      () => df.select(col(pkCol), col(labelCol), col(tsCol))
+        .write.mode("overwrite").parquet(s"$dir/target.parquet")))
 
   /** Entity-key retrieval: join features to target on the primary key
     * (the reference's training-set construction when timestamps align).

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Lanes
 import graft.features.LabelOps
 import graft.split.Splits
 
@@ -15,6 +16,26 @@ import graft.split.Splits
   * Everything stays distributed: splits are filters, weights join via
   * broadcast, search trials reuse the cached train/valid frames, and
   * only metrics and the champion model come back to the driver.
+  *
+  * Independent chains of Spark jobs run as [[graft.Lanes]]. On a small
+  * feature set each step is a run of small, mostly one-task jobs, so a
+  * serial walk leaves most cores idle between driver round trips:
+  *   - each model's search is one lane; results keep `cfg.models` order,
+  *     so `reports` and [[Champion.select]]'s tie-break do not depend on
+  *     which lane finishes first;
+  *   - after threshold tuning, three lanes: the validation metrics;
+  *     every tracker write, on one lane in a fixed order, because the
+  *     parquet tracker appends to shared tables (`runs`, `stages`) whose
+  *     `_temporary` directory concurrent appends would share; and
+  *     persistence (`valid_in` alongside the champion bundle, then batch
+  *     scoring);
+  *   - the champion run's logRun, register and promote follow the join.
+  * Results do not change: every lane runs the same deterministic jobs.
+  *
+  * Trade-off: concurrent fits hold each model's internal cache at once
+  * (LR instance blocks plus GBT tree points), so peak cache is the sum
+  * over model kinds instead of the max. It is bounded by the number of
+  * kinds in `cfg.models`, never by the number of trials.
   */
 object TrainPipeline {
 
@@ -102,12 +123,21 @@ object TrainPipeline {
     val (train0, valid0) = Splits.stratifiedRandomSplit(
       feats, "label", cfg.pkCol, cfg.trainFraction, cfg.seed)
     val train = train0.cache(); val valid = valid0.cache()
+    // Lanes.all returns only once every lane has stopped, on success or
+    // failure, so nothing still reads the caches when they are dropped
+    try runOnSplits(spark, cfg, modelDir, runTag, tracker, train, valid)
+    finally { train.unpersist(); valid.unpersist() }
+  }
 
-    // 3. per-model search on the shared splits: multiclass scores by
-    // weighted F1 (random search); binary picks the configured strategy
+  private def runOnSplits(spark: SparkSession, cfg: Config, modelDir: Option[String],
+      runTag: String, tracker: Option[TrackerBackend], train: DataFrame,
+      valid: DataFrame): Result = {
+    // 3. per-model search on the shared splits, one lane per model:
+    // multiclass scores by weighted F1 (random search); binary picks the
+    // configured strategy
     val multiclass = cfg.objective == "multiclass"
     val searchMetric = if (multiclass) "valid_weighted_f1" else "valid_auc"
-    val searched = cfg.models.map { case (kind, space) =>
+    val searched = Lanes.all(cfg.models.map { case (kind, space) => () =>
       val r =
         if (multiclass) Trainer.randomSearchMulticlass(kind, space, train, valid,
           cfg.trialsPerModel, cfg.seed, weightCol = Some("weight"))
@@ -122,9 +152,9 @@ object TrainPipeline {
             cfg.seed, weightCol = Some("weight"))
         }
       (kind.toString, r)
-    }
+    })
     val reports = searched.map { case (name, r) => ModelReport(name, r.bestMetric, r.bestParams) }
-    tracker.foreach { t =>
+    def logSearch(t: TrackerBackend): Unit =
       searched.zipWithIndex.foreach { case ((name, r), i) =>
         t.logRun(ExperimentTracker.Run(
           runId = s"run_${runTag}_${name}_$i", model = name, params = r.bestParams,
@@ -132,32 +162,28 @@ object TrainPipeline {
           timestampMs = System.currentTimeMillis() + i))
         t.logTrials(s"run_${runTag}_${name}_$i", r.trials)
       }
-    }
 
     // 4. champion selection with deployment gate
     val champion = Champion.select(
       searched.map { case (name, r) => Champion.Candidate(name, r.bestModel, r.bestMetric) },
       cfg.deploymentThreshold)
+    val c = champion match {
+      case Some(c) => c
+      case None =>
+        tracker.foreach(logSearch)
+        return Result(None, reports, 0.5, Map.empty, runTag = runTag)
+    }
 
-    // 5. (optional) score calibration, then threshold tuning +
-    // validation metrics for the champion. The fitted calibrator is
-    // RETURNED (Result.calibrator) — tunedThreshold lives on the
-    // calibrated scale, so a deployment must apply the same map.
-    // Multiclass: calibration, thresholds, and the binary curve set
-    // don't apply (reference skips ECE for multiclass too) — metrics
-    // come from multiclassSummary, the CM from the argmax prediction,
-    // and tunedThreshold is NaN by contract.
-    val (tuned, metrics, calibrator) = champion match {
-      case Some(c) if multiclass =>
-        val pred = c.model.transform(valid)
-        val m = Evaluator.multiclassSummary(pred, "label", "prediction").head()
-        tracker.foreach { tk =>
-          tk.logConfusionMatrix(s"champion_$runTag",
-            Evaluator.confusionMatrix(pred, "label", "prediction"))
-        }
-        (Double.NaN, m.schema.fieldNames.map(f => f -> m.getAs[Double](f)).toMap,
-          Option.empty[Calibration.Calibrator])
-      case Some(c) =>
+    // 5. (optional) score calibration, then threshold tuning for the
+    // champion. The fitted calibrator is RETURNED (Result.calibrator) —
+    // tunedThreshold lives on the calibrated scale, so a deployment must
+    // apply the same map. Multiclass: calibration, thresholds, and the
+    // binary curve set don't apply (reference skips ECE for multiclass
+    // too) — metrics come from multiclassSummary, the CM from the argmax
+    // prediction, and tunedThreshold is NaN by contract.
+    val (scored, tuned, calibrator) =
+      if (multiclass) (c.model.transform(valid), Double.NaN, Option.empty[Calibration.Calibrator])
+      else {
         val raw = c.model.transform(valid).withColumn("p", Trainer.posProb("probability"))
         val (scored, cal) =
           if (!cfg.calibrate) (raw, None)
@@ -167,62 +193,74 @@ object TrainPipeline {
               Some(fitted))
           }
         val (t, _) = Calibration.tuneThreshold(scored, "label", "p", cfg.fbetaBeta, cfg.thresholdGrid)
-        val m = Evaluator.binaryMetrics(scored, "label", "p", cfg.pkCol, t, cfg.fbetaBeta).head()
-        // confusion matrix from the SAME (calibrated) scores the
-        // threshold was tuned on — raw scores + a calibrated-scale
-        // threshold would make the logged CM disagree with metrics
-        tracker.foreach { tk =>
-          val withPred = scored.withColumn("pred", Evaluator.predictAt(col("p"), t))
-          tk.logConfusionMatrix(s"champion_$runTag",
-            Evaluator.confusionMatrix(withPred, "label", "pred"))
-          // plot-ready figure set from the same calibrated scores AND
-          // the same threshold grid the tuning ran on, so the curve
-          // frames contain the deployed operating point
-          if (cfg.logCurves)
-            EvalArtifacts.logAll(tk, s"champion_$runTag", scored, "label", "p", cfg.pkCol,
-              thresholds = cfg.thresholdGrid)
-        }
-        (t, m.schema.fieldNames.map(f => f -> m.getAs[Double](f)).toMap, cal)
-      case None => (0.5, Map.empty[String, Double], None)
-    }
+        (scored, t, cal)
+      }
 
-    // 6. persistence + batch scoring (inference analog); the persisted
-    // champion registers as a deployable tracker run (model artifact)
-    (champion, modelDir) match {
-      case (Some(c), Some(dir)) =>
-        valid.select(col(cfg.pkCol), col("label"), col(cfg.featureArrayCol))
-          .write.mode("overwrite").parquet(s"$dir/valid_in")
-        if (multiclass) {
-          // no Deployment bundle — its score() is positive-probability +
-          // threshold algebra, a binary contract; the champion persists
-          // bare and batch scoring emits prediction + class_probs
-          Champion.save(c.model, s"$dir/champion")
-          Champion.batchPredictMulticlass(spark, c.model, s"$dir/valid_in",
-            s"$dir/valid_scored", cfg.featureArrayCol)
-        } else {
-          // full deployable bundle: champion + calibrator + tuned
-          // threshold, reloadable via Deployment.load in a fresh session
-          Deployment.save(spark, dir, c.model, calibrator, tuned)
-          Champion.batchPredict(spark, c.model, s"$dir/valid_in", s"$dir/valid_scored", cfg.featureArrayCol)
-        }
-        tracker.foreach { tk =>
-          tk.logRun(ExperimentTracker.Run(
-            runId = s"champion_$runTag", model = c.name, params = Map.empty,
-            metrics = metrics + (searchMetric -> c.metric),
-            timestampMs = System.currentTimeMillis(),
-            // `bundle` points at the whole reloadable Deployment.save
-            // directory — what ModelRegistry.loadChampionBundle reads
-            // (binary only; multiclass has no bundle by contract)
-            artifacts = Map("model" -> s"$dir/champion") ++
-              (if (multiclass) Map.empty else Map("bundle" -> dir))))
-          // lifecycle: the new run enters as a candidate and is promoted
-          // (archiving any prior champion in this tracker)
-          ModelRegistry.register(tk, s"champion_$runTag")
-          ModelRegistry.promote(tk, s"champion_$runTag")
-        }
-      case _ => ()
+    // 6. three lanes: validation metrics; every tracker write, in order
+    // on one lane (see the object doc for why they share it); and
+    // persistence + batch scoring (inference analog)
+    val metricsLane = () => {
+      val m =
+        if (multiclass) Evaluator.multiclassSummary(scored, "label", "prediction").head()
+        else Evaluator.binaryMetrics(scored, "label", "p", cfg.pkCol, tuned, cfg.fbetaBeta).head()
+      m.schema.fieldNames.map(f => f -> m.getAs[Double](f)).toMap
     }
-    train.unpersist(); valid.unpersist()
+    val trackerLane = () => tracker.foreach { tk =>
+      logSearch(tk)
+      // confusion matrix from the SAME (calibrated) scores the
+      // threshold was tuned on — raw scores + a calibrated-scale
+      // threshold would make the logged CM disagree with metrics
+      if (multiclass)
+        tk.logConfusionMatrix(s"champion_$runTag",
+          Evaluator.confusionMatrix(scored, "label", "prediction"))
+      else {
+        val withPred = scored.withColumn("pred", Evaluator.predictAt(col("p"), tuned))
+        tk.logConfusionMatrix(s"champion_$runTag",
+          Evaluator.confusionMatrix(withPred, "label", "pred"))
+        // plot-ready figure set from the same calibrated scores AND
+        // the same threshold grid the tuning ran on, so the curve
+        // frames contain the deployed operating point
+        if (cfg.logCurves)
+          EvalArtifacts.logAll(tk, s"champion_$runTag", scored, "label", "p", cfg.pkCol,
+            thresholds = cfg.thresholdGrid)
+      }
+    }
+    val persistLane = () => modelDir.foreach { dir =>
+      Lanes.all(Seq(
+        () => valid.select(col(cfg.pkCol), col("label"), col(cfg.featureArrayCol))
+          .write.mode("overwrite").parquet(s"$dir/valid_in"),
+        // multiclass: no Deployment bundle — its score() is
+        // positive-probability + threshold algebra, a binary contract;
+        // the champion persists bare. Binary: the full deployable
+        // bundle (champion + calibrator + tuned threshold), reloadable
+        // via Deployment.load in a fresh session
+        () => if (multiclass) Champion.save(c.model, s"$dir/champion")
+          else Deployment.save(spark, dir, c.model, calibrator, tuned)))
+      if (multiclass) Champion.batchPredictMulticlass(spark, c.model, s"$dir/valid_in",
+        s"$dir/valid_scored", cfg.featureArrayCol)
+      else Champion.batchPredict(spark, c.model, s"$dir/valid_in", s"$dir/valid_scored",
+        cfg.featureArrayCol)
+    }
+    val metrics = Lanes.all(Seq[() => Any](metricsLane, trackerLane, persistLane))
+      .head.asInstanceOf[Map[String, Double]]
+
+    // 7. the persisted champion registers as a deployable tracker run
+    // (model artifact), after every lane has landed
+    for (tk <- tracker; dir <- modelDir) {
+      tk.logRun(ExperimentTracker.Run(
+        runId = s"champion_$runTag", model = c.name, params = Map.empty,
+        metrics = metrics + (searchMetric -> c.metric),
+        timestampMs = System.currentTimeMillis(),
+        // `bundle` points at the whole reloadable Deployment.save
+        // directory — what ModelRegistry.loadChampionBundle reads
+        // (binary only; multiclass has no bundle by contract)
+        artifacts = Map("model" -> s"$dir/champion") ++
+          (if (multiclass) Map.empty else Map("bundle" -> dir))))
+      // lifecycle: the new run enters as a candidate and is promoted
+      // (archiving any prior champion in this tracker)
+      ModelRegistry.register(tk, s"champion_$runTag")
+      ModelRegistry.promote(tk, s"champion_$runTag")
+    }
     Result(champion, reports, tuned, metrics, calibrator.map(_.method), calibrator, runTag)
   }
 }

@@ -391,36 +391,32 @@ object Trainer {
     SearchResult(bm, bp, bmetric, trials)
   }
 
-  /** Random search with trials fitted CONCURRENTLY from a fixed thread
-    * pool (reference: optimizer.py:402 tune_model_in_parallel).
-    * Results are IDENTICAL to [[randomSearch]]: the parameter sets come
-    * from the same seeded sampling sequence drawn up front, trial order
-    * is preserved, and MLlib fits are deterministic — only wall-clock
-    * changes. On a cluster, each trial is an independent chain of Spark
-    * jobs, so concurrent submission overlaps scheduling gaps and keeps
-    * executors busy while another trial's driver-side phase runs.
+  /** Random search with trials fitted CONCURRENTLY (reference:
+    * optimizer.py:402 tune_model_in_parallel). Results are IDENTICAL to
+    * [[randomSearch]]: the parameter sets come from the same seeded
+    * sampling sequence drawn up front, trial order is preserved, and
+    * MLlib fits are deterministic — only wall-clock changes. The trials
+    * split into `parallelism` contiguous groups that run as
+    * [[graft.Lanes]], each group's trials in order: every trial is an
+    * independent chain of Spark jobs, so concurrent submission overlaps
+    * scheduling gaps and keeps executors busy while another trial's
+    * driver-side phase runs.
     */
   def randomSearchParallel(kind: ModelKind, space: Seq[ParamRange], train: DataFrame,
       valid: DataFrame, maxTrials: Int, seed: Long,
       weightCol: Option[String] = None, parallelism: Int = 4): SearchResult = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     require(parallelism >= 1)
     val rnd = new scala.util.Random(seed)
     val paramSets = (1 to maxTrials).map(_ => space.map(r => r.name -> r.sample(rnd)).toMap)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = paramSets.map { p =>
-        Future {
-          val m: Model[_] = classifier(kind, p, weightCol).fit(train)
-          (p, m, validationAuc(m, valid))
-        }
+    val groupSize = math.max(1, (paramSets.size + parallelism - 1) / parallelism)
+    val scored = graft.Lanes.all(paramSets.grouped(groupSize).toSeq.map { group => () =>
+      group.map { p =>
+        val m: Model[_] = classifier(kind, p, weightCol).fit(train)
+        (p, m, validationAuc(m, valid))
       }
-      val scored = Await.result(Future.sequence(futures), Duration.Inf)
-      val (bp, bm, bmetric) = scored.maxBy(_._3)
-      SearchResult(bm, bp, bmetric, scored.map(t => Trial(t._1, t._3)))
-    } finally pool.shutdown()
+    }).flatten
+    val (bp, bm, bmetric) = scored.maxBy(_._3)
+    SearchResult(bm, bp, bmetric, scored.map(t => Trial(t._1, t._3)))
   }
 
   /** Feature importances (tree models) / coefficients (linear) as a

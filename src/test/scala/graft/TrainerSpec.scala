@@ -343,23 +343,82 @@ class TrainerSpec extends SparkSpec {
   }
 
   test("TrainPipeline runs the full train.py flow end to end") {
-    import graft.ml.TrainPipeline
+    import graft.ml.{ModelRegistry, ParquetTracker, TrainPipeline}
     val data = blobs.select($"id", $"label", $"arr")
     val dir = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
-    val res = TrainPipeline.run(spark, data,
-      TrainPipeline.Config(labelCol = "label", pkCol = "id", featureArrayCol = "arr",
-        trialsPerModel = 1, deploymentThreshold = 0.6),
-      modelDir = Some(dir))
+    val cfg = TrainPipeline.Config(labelCol = "label", pkCol = "id", featureArrayCol = "arr",
+      trialsPerModel = 1, deploymentThreshold = 0.6, calibrate = true,
+      trackerDir = Some(s"$dir/tracker"))
+    // two invocations into one tracker: the concurrent lanes must not
+    // change any result, and the tracker writes keep their order
+    val runs = Seq("a", "b").map(m => TrainPipeline.run(spark, data, cfg, modelDir = Some(s"$dir/$m")))
+    val res = runs.head
     assert(res.reports.size == 2)
     assert(res.champion.isDefined, s"reports: ${res.reports}")
     assert(res.validMetrics("roc_auc") > 0.9)
     assert(res.tunedThreshold > 0.0 && res.tunedThreshold < 1.0)
-    val scored = spark.read.parquet(s"$dir/valid_scored")
+    val scored = spark.read.parquet(s"$dir/a/valid_scored")
     assert(scored.count() > 0 && scored.columns.contains("pos_prob"))
+    val again = runs(1)
+    assert(again.champion.map(c => (c.name, c.metric)) == res.champion.map(c => (c.name, c.metric)))
+    assert(again.reports == res.reports)
+    assert(again.tunedThreshold == res.tunedThreshold)
+    assert(again.validMetrics == res.validMetrics)
+    // the models' search runs plus one champion run per invocation,
+    // every search run with its trials
+    val tracker = new ParquetTracker(spark, s"$dir/tracker")
+    val searchRuns = for (r <- runs; (name, i) <- Seq("LogReg", "GBT").zipWithIndex)
+      yield s"run_${r.runTag}_${name}_$i"
+    val championRuns = runs.map(r => s"champion_${r.runTag}")
+    assert(tracker.listRuns().select("runId").as[String].collect().toSet ==
+      (searchRuns ++ championRuns).toSet)
+    searchRuns.foreach(id => assert(tracker.trialsOf(id).count() == 1, id))
+    // lifecycle: each run enters as a candidate before it is promoted;
+    // the second promotion archives the first champion
+    val log = tracker.stageLog().orderBy($"seq").collect()
+      .map(r => (r.getAs[String]("runId"), r.getAs[String]("stage"), r.getAs[Long]("seq")))
+    assert(log.map(r => (r._1, r._2)).toSeq == Seq(
+      (championRuns(0), ModelRegistry.Candidate), (championRuns(0), ModelRegistry.Champion),
+      (championRuns(1), ModelRegistry.Candidate), (championRuns(1), ModelRegistry.Champion),
+      (championRuns(0), ModelRegistry.Archived)))
+    assert(log.map(_._3).distinct.length == log.length)
     // deployment gate: impossible threshold → no champion
     val gated = TrainPipeline.run(spark, data,
       TrainPipeline.Config("label", "id", "arr", trialsPerModel = 1, deploymentThreshold = 1.01))
     assert(gated.champion.isEmpty && gated.validMetrics.isEmpty)
+  }
+
+  test("TrainPipeline: a failing lane fails the run after every lane stopped; caches dropped") {
+    import graft.ml.{ExperimentTracker, TrackerBackend, TrackerRegistry, TrainPipeline}
+    val boom = new RuntimeException("logCurve failed")
+    // a tracker that accepts every write up to the champion's curves
+    TrackerRegistry.register("failing-curves", (s, _) => new TrackerBackend {
+      val spark = s
+      def logRun(run: ExperimentTracker.Run): Unit = ()
+      def listRuns(): DataFrame = ???
+      def logTrials(runId: String, trials: Seq[Trainer.Trial]): Unit = ()
+      def trialsOf(runId: String): DataFrame = ???
+      def logConfusionMatrix(runId: String, cm: DataFrame): Unit = ()
+      def confusionMatrix(runId: String): DataFrame = ???
+      def logCurve(runId: String, name: String, curve: EvalArtifacts.Curve): Unit = throw boom
+      def curve(runId: String, name: String): EvalArtifacts.Curve = ???
+      def curveNames(runId: String): Seq[String] = ???
+      def logStage(runId: String, stage: String, seq: Long): Unit = ()
+      def stageLog(): DataFrame = ???
+    })
+    val data = blobs.select($"id", $"label", $"arr")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[RuntimeException](TrainPipeline.run(spark, data,
+      TrainPipeline.Config(labelCol = "label", pkCol = "id", featureArrayCol = "arr",
+        trialsPerModel = 1, deploymentThreshold = 0.6,
+        trackerDir = Some("unused"), trackerBackend = "failing-curves"),
+      modelDir = Some(java.nio.file.Files.createTempDirectory("graft-failing").toString)))
+    assert(e eq boom)
+    // train/valid (and every fit's internal cache) are released
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty)
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName.startsWith("graft-lane") && t.isAlive))
   }
 
   test("TrainPipeline with halving search, calibration, and tracker wired in") {
