@@ -1,12 +1,8 @@
 package graft.ml
 
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import ExperimentTracker.Run
 
@@ -45,9 +41,9 @@ import ExperimentTracker.Run
   */
 final class CometTracker(val spark: SparkSession, uri: String,
     apiKey: String = "anonymous", artifactRoot: Option[String] = None)
-    extends TrackerBackend {
-  private val base = uri.stripSuffix("/")
-  private val http = HttpClient.newHttpClient()
+    extends FileRunArtifacts {
+  private val http = new TrackerHttp(s"${uri.stripSuffix("/")}/api/rest/v2", "comet",
+    "Authorization" -> apiKey)
   private implicit val fmt: Formats = DefaultFormats
 
   private val artDir: String = artifactRoot.getOrElse(
@@ -56,37 +52,12 @@ final class CometTracker(val spark: SparkSession, uri: String,
   /** One project per tracker instance (the experiment-grouping unit). */
   private val projectName = s"graft-${java.util.UUID.randomUUID()}"
 
-  private def post(endpoint: String, body: JValue): JValue = {
-    val req = HttpRequest.newBuilder(URI.create(s"$base/api/rest/v2/$endpoint"))
-      .header("Content-Type", "application/json")
-      .header("Authorization", apiKey)
-      .POST(HttpRequest.BodyPublishers.ofString(JsonMethods.compact(JsonMethods.render(body))))
-      .build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200,
-      s"comet $endpoint failed: HTTP ${resp.statusCode()} ${resp.body().take(300)}")
-    JsonMethods.parse(resp.body())
-  }
-
-  private def get(endpoint: String, query: String): JValue = {
-    val req = HttpRequest.newBuilder(URI.create(s"$base/api/rest/v2/$endpoint?$query"))
-      .header("Authorization", apiKey)
-      .GET().build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200,
-      s"comet $endpoint failed: HTTP ${resp.statusCode()} ${resp.body().take(300)}")
-    JsonMethods.parse(resp.body())
-  }
-
   // graft runId → experimentKey; misses resolve by experiment NAME
   // (logRun sets name = graft run id) within this tracker's project
   private val known = scala.collection.concurrent.TrieMap[String, String]()
 
   private def experiments(): Seq[JValue] =
-    (get("experiments", s"projectName=$projectName") \ "experiments") match {
-      case JArray(es) => es
-      case _ => Seq.empty
-    }
+    TrackerWire.items(http.get("experiments", s"projectName=$projectName") \ "experiments")
 
   private def resolve(graftId: String): String =
     known.getOrElseUpdate(graftId, {
@@ -98,52 +69,44 @@ final class CometTracker(val spark: SparkSession, uri: String,
 
   /** name → (value, step) samples in log order. */
   private def metricsRaw(key: String): Seq[(String, Double, Int)] =
-    (get("experiment/metrics-raw", s"experimentKey=$key") \ "metrics") match {
-      case JArray(ms) => ms.map(m => ((m \ "metricName").extract[String],
-        (m \ "metricValue").extract[Double],
+    TrackerWire.items(http.get("experiment/metrics-raw", s"experimentKey=$key") \ "metrics")
+      .map(m => ((m \ "metricName").extract[String], (m \ "metricValue").extract[Double],
         (m \ "step").extractOrElse[Int](0)))
-      case _ => Seq.empty
-    }
 
-  private def paramsOf(key: String): Map[String, String] =
-    (get("experiment/parameters", s"experimentKey=$key") \ "results") match {
-      case JArray(ps) => ps.map(p => (p \ "name").extract[String] ->
-        (p \ "valueCurrent").extract[String]).toMap
-      case _ => Map.empty
-    }
+  private def trialHistory(key: String): Seq[(Int, Double)] =
+    metricsRaw(key).collect { case (TrackerWire.TrialMetric, v, step) => (step, v) }
 
-  private def othersOf(key: String): Map[String, String] =
-    (get("experiment/log-other", s"experimentKey=$key") \ "logOtherList") match {
-      case JArray(os) => os.map(o => (o \ "name").extract[String] ->
-        (o \ "valueCurrent").extract[String]).toMap
-      case _ => Map.empty
-    }
+  private def paramsOf(key: String): Map[String, String] = TrackerWire.pairs(
+    http.get("experiment/parameters", s"experimentKey=$key") \ "results", "name", "valueCurrent")
+
+  private def othersOf(key: String): Map[String, String] = TrackerWire.pairs(
+    http.get("experiment/log-other", s"experimentKey=$key") \ "logOtherList", "name", "valueCurrent")
 
   private def logOther(key: String, name: String, value: String): Unit = {
-    post("write/experiment/log-other", JObject("experimentKey" -> JString(key),
+    http.post("write/experiment/log-other", JObject("experimentKey" -> JString(key),
       "key" -> JString(name), "value" -> JString(value)))
     ()
   }
 
   override def logRun(run: Run): Unit = {
-    val created = post("write/experiment/create", JObject(
+    val created = http.post("write/experiment/create", JObject(
       "workspaceName" -> JString("graft"),
       "projectName" -> JString(projectName),
       "experimentName" -> JString(run.runId)))
     val key = (created \ "experimentKey").extract[String]
     known.put(run.runId, key)
     run.metrics.foreach { case (k, v) =>
-      post("write/experiment/metric", JObject("experimentKey" -> JString(key),
+      http.post("write/experiment/metric", JObject("experimentKey" -> JString(key),
         "metricName" -> JString(k), "metricValue" -> JDouble(v),
         "step" -> JInt(0), "timestamp" -> JInt(run.timestampMs)))
     }
     run.params.foreach { case (k, v) =>
-      post("write/experiment/parameter", JObject("experimentKey" -> JString(key),
+      http.post("write/experiment/parameter", JObject("experimentKey" -> JString(key),
         "parameterName" -> JString(k), "parameterValue" -> JString(v.toString)))
     }
-    logOther(key, "graft.model", run.model)
-    logOther(key, "graft.timestamp_ms", run.timestampMs.toString)
-    run.artifacts.foreach { case (k, v) => logOther(key, s"graft.artifact.$k", v) }
+    logOther(key, TrackerWire.Model, run.model)
+    logOther(key, TrackerWire.TimestampMs, run.timestampMs.toString)
+    run.artifacts.foreach { case (k, v) => logOther(key, TrackerWire.artifactKey(k), v) }
   }
 
   override def listRuns(): DataFrame = {
@@ -155,18 +118,16 @@ final class CometTracker(val spark: SparkSession, uri: String,
       // metrics-raw response carries no ordering contract, so "latest"
       // is the max (step, wire position) — wire order alone would pick
       // a stale value if the server returns samples out of log order
-      val latest = metricsRaw(key).filterNot(_._1 == "trial_metric")
+      val latest = metricsRaw(key).filterNot(_._1 == TrackerWire.TrialMetric)
         .groupBy(_._1).map { case (n, ss) =>
           n -> ss.zipWithIndex.maxBy { case ((_, _, step), pos) => (step, pos) }._1._2 }
       Run(
         runId = (e \ "experimentName").extract[String],
-        model = others.getOrElse("graft.model", ""),
+        model = others.getOrElse(TrackerWire.Model, ""),
         params = paramsOf(key).map { case (k, v) => k -> v.toDouble },
         metrics = latest,
-        timestampMs = others.getOrElse("graft.timestamp_ms", "0").toLong,
-        artifacts = others.collect {
-          case (k, v) if k.startsWith("graft.artifact.") =>
-            k.stripPrefix("graft.artifact.") -> v })
+        timestampMs = others.getOrElse(TrackerWire.TimestampMs, "0").toLong,
+        artifacts = TrackerWire.artifactsOf(others))
     }
     require(rows.nonEmpty, "no experiment runs logged")
     spark.createDataFrame(rows).orderBy(col("timestampMs").desc)
@@ -178,30 +139,18 @@ final class CometTracker(val spark: SparkSession, uri: String,
     // second logTrials call APPENDS instead of restarting at step 0
     // (which would interleave duplicate steps into trialsOf). One
     // metrics-raw GET per call — tracking metadata is tiny.
-    val offset = metricsRaw(key).count(_._1 == "trial_metric")
+    val offset = trialHistory(key).size
     trials.zipWithIndex.foreach { case (t, i) =>
-      post("write/experiment/metric", JObject("experimentKey" -> JString(key),
-        "metricName" -> JString("trial_metric"), "metricValue" -> JDouble(t.metric),
+      http.post("write/experiment/metric", JObject("experimentKey" -> JString(key),
+        "metricName" -> JString(TrackerWire.TrialMetric), "metricValue" -> JDouble(t.metric),
         "step" -> JInt(offset + i), "timestamp" -> JInt(0)))
-      logOther(key, s"graft.trial_params.${offset + i}", JsonMethods.compact(
-        JsonMethods.render(JObject(t.params.toList.map {
-          case (k, v) => k -> (JDouble(v): JValue) }))))
+      logOther(key, TrackerWire.trialParamsKey(offset + i), TrackerWire.encodeParams(t.params))
     }
   }
 
   override def trialsOf(runId: String): DataFrame = {
-    import spark.implicits._
     val key = resolve(runId)
-    val others = othersOf(key)
-    metricsRaw(key).filter(_._1 == "trial_metric")
-      .map { case (_, v, step) => (step, v) }.sortBy(_._1)
-      .map { case (i, metric) =>
-        val params = JsonMethods.parse(others(s"graft.trial_params.$i")) match {
-          case JObject(fs) => fs.map { case (k, v) => k -> v.extract[Double] }.toMap
-          case _ => Map.empty[String, Double]
-        }
-        (i, params, metric)
-      }.toDF("trial", "params", "metric").orderBy(col("trial"))
+    TrackerWire.trials(spark, trialHistory(key), othersOf(key))
   }
 
   private def artifactDir(graftId: String): String = {
@@ -210,51 +159,16 @@ final class CometTracker(val spark: SparkSession, uri: String,
     d
   }
 
-  override def logConfusionMatrix(runId: String, cm: DataFrame): Unit =
-    cm.write.mode("overwrite").parquet(s"${artifactDir(runId)}/confusion_matrix")
-
-  override def confusionMatrix(runId: String): DataFrame =
-    spark.read.parquet(s"${artifactDir(runId)}/confusion_matrix")
-
-  override def logCurve(runId: String, name: String, curve: EvalArtifacts.Curve): Unit = {
-    import spark.implicits._
-    val basePath = s"${artifactDir(runId)}/curves/$name"
-    curve.frame.write.mode("overwrite").parquet(s"$basePath/data")
-    Seq((curve.chart, curve.xLabel, curve.yLabel))
-      .toDF("chart", "x_label", "y_label")
-      .write.mode("overwrite").parquet(s"$basePath/meta")
-  }
-
-  override def curve(runId: String, name: String): EvalArtifacts.Curve = {
-    val basePath = s"${artifactDir(runId)}/curves/$name"
-    val meta = spark.read.parquet(s"$basePath/meta").head()
-    EvalArtifacts.Curve(meta.getAs[String]("chart"), meta.getAs[String]("x_label"),
-      meta.getAs[String]("y_label"), spark.read.parquet(s"$basePath/data"))
-  }
-
-  override def curveNames(runId: String): Seq[String] = {
-    val d = new java.io.File(s"${artifactDir(runId)}/curves")
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().filter(_.isDirectory).map(_.getName).toSeq.sorted
-  }
+  protected def confusionMatrixPath(runId: String): String =
+    s"${artifactDir(runId)}/confusion_matrix"
+  protected def curvesDir(runId: String): String = s"${artifactDir(runId)}/curves"
 
   override def logStage(runId: String, stage: String, seq: Long): Unit =
-    logOther(resolve(runId), s"graft.stage.$seq", stage)
+    logOther(resolve(runId), TrackerWire.stageKey(seq), stage)
 
-  override def stageLog(): DataFrame = {
-    val rows = experiments().flatMap { e =>
-      val key = (e \ "experimentKey").extract[String]
-      val graftId = (e \ "experimentName").extract[String]
-      othersOf(key).collect {
-        case (k, v) if k.startsWith("graft.stage.") =>
-          Row(graftId, v, k.stripPrefix("graft.stage.").toLong)
-      }
-    }
-    spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("runId", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("stage", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType))))
-  }
+  override def stageLog(): DataFrame =
+    TrackerBackend.stageFrame(spark, experiments().flatMap { e =>
+      TrackerWire.stagesOf((e \ "experimentName").extract[String],
+        othersOf((e \ "experimentKey").extract[String]))
+    })
 }

@@ -1,12 +1,10 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Minimal experiment tracking: append-only parquet log of runs with
-  * params and metrics (reference: src/training/tracking/experiment.py
-  * + experiment_tracker.py — the MLflow/Comet surface reduced to its
-  * queryable core: log runs, list them, pick the best).
+/** Minimal experiment tracking (reference: src/training/tracking/
+  * experiment.py + experiment_tracker.py — the MLflow/Comet surface
+  * reduced to its queryable core: log runs, list them, pick the best).
+  * The stores are the [[TrackerBackend]]s; the durable log is
+  * [[ParquetTracker]].
   */
 object ExperimentTracker {
 
@@ -17,86 +15,4 @@ object ExperimentTracker {
   final case class Run(runId: String, model: String, params: Map[String, Double],
       metrics: Map[String, Double], timestampMs: Long,
       artifacts: Map[String, String] = Map.empty)
-
-  /** Append one run to the experiment log at `dir` (runs live under
-    * `dir/runs` — artifacts get sibling directories).
-    */
-  def logRun(spark: SparkSession, dir: String, run: Run): Unit = {
-    import spark.implicits._
-    Seq(run).toDF().write.mode("append").parquet(s"$dir/runs")
-  }
-
-  /** All runs, most recent first. Reads BOTH storage layouts: the
-    * current `dir/runs` and the legacy one (run parquet files directly
-    * under `dir`, written before trials/artifacts landed), with the
-    * Run schema imposed so pre-`artifacts` logs decode (missing column
-    * → empty map) instead of failing `.as[Run]`.
-    */
-  def listRuns(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val schema = org.apache.spark.sql.Encoders.product[Run].schema
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val runsDir = new Path(root, "runs")
-    val legacy =
-      if (!fs.exists(root)) Array.empty[String]
-      else fs.listStatus(root).filter(st => st.isFile &&
-        st.getPath.getName.endsWith(".parquet")).map(_.getPath.toString)
-    val parts =
-      (if (fs.exists(runsDir)) Seq(runsDir.toString) else Nil) ++ legacy.toSeq
-    require(parts.nonEmpty, s"no experiment runs found under $dir")
-    spark.read.schema(schema).parquet(parts: _*)
-      .withColumn("artifacts",
-        coalesce(col("artifacts"), map().cast("map<string,string>")))
-      .orderBy(col("timestampMs").desc)
-  }
-
-  /** Log EVERY trial of a hyperparameter search, not just the winner
-    * (reference: tracking/study_logger.py log_study_trials — the part
-    * of an Optuna study users query to understand the search surface).
-    */
-  def logTrials(spark: SparkSession, dir: String, runId: String,
-      trials: Seq[Trainer.Trial]): Unit = {
-    import spark.implicits._
-    trials.zipWithIndex
-      .map { case (t, i) => (runId, i, t.params, t.metric) }
-      .toDF("runId", "trial", "params", "metric")
-      .write.mode("append").partitionBy("runId").parquet(s"$dir/trials")
-  }
-
-  /** A run's logged search trials, in trial order (pruned read). */
-  def trialsOf(spark: SparkSession, dir: String, runId: String): DataFrame =
-    spark.read.parquet(s"$dir/trials")
-      .filter(col("runId") === runId).drop("runId").orderBy(col("trial"))
-
-  /** Log a run's confusion-matrix frame as a queryable artifact
-    * (reference: experiment_tracker.py log_confusion_matrix). Stored
-    * partitioned by runId, so per-run reads prune to one partition.
-    */
-  def logConfusionMatrix(dir: String, runId: String, cm: DataFrame): Unit =
-    cm.withColumn("runId", lit(runId)).write.mode("append")
-      .partitionBy("runId").parquet(s"$dir/confusion_matrix")
-
-  /** A run's logged confusion matrix (partition-pruned read). */
-  def confusionMatrix(spark: SparkSession, dir: String, runId: String): DataFrame =
-    spark.read.parquet(s"$dir/confusion_matrix")
-      .filter(col("runId") === runId).drop("runId")
-
-  /** Best run by a metric (ties → most recent), among the most recent
-    * `maxRuns` (reference: training-config.yml max_eval_experiments).
-    * Delegates to the [[TrackerBackend]] default so the ranking rule
-    * lives in exactly one place.
-    */
-  def bestRun(spark: SparkSession, dir: String, metric: String, maxRuns: Int): Option[Run] =
-    new ParquetTracker(spark, dir).bestRun(metric, maxRuns)
-
-  /** Best run that ALSO carries a registered model artifact — the
-    * deployable-only selection rule (reference: selector.py
-    * select_best_model skips experiments without model files).
-    * Delegates to the [[TrackerBackend]] default, so runs archived via
-    * [[ModelRegistry]] are excluded through THIS legacy surface too.
-    */
-  def bestDeployableRun(spark: SparkSession, dir: String, metric: String,
-      maxRuns: Int, modelArtifact: String = "model"): Option[Run] =
-    new ParquetTracker(spark, dir).bestDeployableRun(metric, maxRuns, modelArtifact)
 }

@@ -1,9 +1,9 @@
 package graft.ml
 
 import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.{HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -38,34 +38,15 @@ import ExperimentTracker.Run
   * construction; the DATA stays in Spark.
   */
 final class MlflowTracker(val spark: SparkSession, uri: String,
-    pageSize: Int = 1000) extends TrackerBackend {
+    pageSize: Int = 1000) extends FileRunArtifacts {
   private val base = uri.stripSuffix("/")
-  private val http = HttpClient.newHttpClient()
+  private val http = new TrackerHttp(s"$base/api/2.0/mlflow", "mlflow")
+  private val proxy = new TrackerHttp(s"$base/api/2.0/mlflow-artifacts/artifacts", "mlflow")
   private implicit val fmt: Formats = DefaultFormats
-
-  private def post(endpoint: String, body: JValue): JValue = {
-    val req = HttpRequest.newBuilder(URI.create(s"$base/api/2.0/mlflow/$endpoint"))
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofString(JsonMethods.compact(JsonMethods.render(body))))
-      .build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200,
-      s"mlflow $endpoint failed: HTTP ${resp.statusCode()} ${resp.body().take(300)}")
-    JsonMethods.parse(resp.body())
-  }
-
-  private def get(endpoint: String, query: String): JValue = {
-    val req = HttpRequest.newBuilder(URI.create(s"$base/api/2.0/mlflow/$endpoint?$query"))
-      .GET().build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200,
-      s"mlflow $endpoint failed: HTTP ${resp.statusCode()} ${resp.body().take(300)}")
-    JsonMethods.parse(resp.body())
-  }
 
   /** One experiment per tracker instance, created on first use. */
   private lazy val experimentId: String =
-    (post("experiments/create",
+    (http.post("experiments/create",
       JObject("name" -> JString(s"graft-${java.util.UUID.randomUUID()}")))
       \ "experiment_id").extract[String]
 
@@ -91,12 +72,9 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
         "experiment_ids" -> JArray(List(JString(experimentId))),
         "order_by" -> JArray(List(JString("attributes.start_time DESC"))),
         "max_results" -> JInt(pageSize))
-      val out = post("runs/search",
+      val out = http.post("runs/search",
         JObject(base ++ token.map(t => "page_token" -> (JString(t): JValue))))
-      val got = (out \ "runs") match {
-        case JArray(rs) => rs
-        case _ => Nil
-      }
+      val got = TrackerWire.items(out \ "runs")
       acc ++= got
       token = (out \ "next_page_token") match {
         case JString(t) if t.nonEmpty => Some(t)
@@ -110,11 +88,7 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
   }
 
   private def tagsOf(run: JValue): Map[String, String] =
-    (run \ "data" \ "tags") match {
-      case JArray(ts) => ts.map(t =>
-        (t \ "key").extract[String] -> (t \ "value").extract[String]).toMap
-      case _ => Map.empty
-    }
+    TrackerWire.pairs(run \ "data" \ "tags", "key", "value")
 
   // params come back as strings, metrics as numbers — accept either
   private def numOf(v: JValue): Double = v match {
@@ -126,15 +100,12 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
   }
 
   private def kvOf(run: JValue, section: String): Map[String, Double] =
-    (run \ "data" \ section) match {
-      case JArray(ms) => ms.map(m =>
-        (m \ "key").extract[String] -> numOf(m \ "value")).toMap
-      case _ => Map.empty
-    }
+    TrackerWire.items(run \ "data" \ section).map(m =>
+      (m \ "key").extract[String] -> numOf(m \ "value")).toMap
 
   private def resolve(graftId: String): (String, String) =
     known.getOrElseUpdate(graftId, {
-      val hit = searchRuns().find(r => tagsOf(r).get("graft.run_id").contains(graftId))
+      val hit = searchRuns().find(r => tagsOf(r).get(TrackerWire.RunId).contains(graftId))
         .getOrElse(sys.error(s"mlflow tracker: unknown run '$graftId'"))
       ((hit \ "info" \ "run_id").extract[String],
         (hit \ "info" \ "artifact_uri").extract[String])
@@ -155,25 +126,28 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
     d
   }
 
+  protected def confusionMatrixPath(runId: String): String =
+    s"${artifactDir(runId)}/confusion_matrix"
+  protected def curvesDir(runId: String): String = s"${artifactDir(runId)}/curves"
+
   private def setTag(mlflowId: String, key: String, value: String): Unit = {
-    post("runs/set-tag", JObject("run_id" -> JString(mlflowId),
+    http.post("runs/set-tag", JObject("run_id" -> JString(mlflowId),
       "key" -> JString(key), "value" -> JString(value)))
     ()
   }
 
   override def logRun(run: Run): Unit = {
-    val created = post("runs/create", JObject(
+    val tags = (TrackerWire.RunId -> run.runId) :: (TrackerWire.Model -> run.model) ::
+      run.artifacts.toList.map { case (k, v) => TrackerWire.artifactKey(k) -> v }
+    val created = http.post("runs/create", JObject(
       "experiment_id" -> JString(experimentId),
       "start_time" -> JInt(run.timestampMs),
-      "tags" -> JArray(
-        JObject("key" -> JString("graft.run_id"), "value" -> JString(run.runId)) ::
-        JObject("key" -> JString("graft.model"), "value" -> JString(run.model)) ::
-        run.artifacts.toList.map { case (k, v) =>
-          JObject("key" -> JString(s"graft.artifact.$k"), "value" -> JString(v)) })))
+      "tags" -> JArray(tags.map { case (k, v) =>
+        JObject("key" -> JString(k), "value" -> JString(v)) })))
     val mlflowId = (created \ "run" \ "info" \ "run_id").extract[String]
     val artUri = (created \ "run" \ "info" \ "artifact_uri").extract[String]
     known.put(run.runId, (mlflowId, artUri))
-    post("runs/log-batch", JObject(
+    http.post("runs/log-batch", JObject(
       "run_id" -> JString(mlflowId),
       "metrics" -> JArray(run.metrics.toList.map { case (k, v) =>
         JObject("key" -> JString(k), "value" -> JDouble(v),
@@ -187,53 +161,44 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
     val rows = searchRuns().map { r =>
       val tags = tagsOf(r)
       Run(
-        runId = tags.getOrElse("graft.run_id",
+        runId = tags.getOrElse(TrackerWire.RunId,
           (r \ "info" \ "run_id").extract[String]),
-        model = tags.getOrElse("graft.model", ""),
+        model = tags.getOrElse(TrackerWire.Model, ""),
         params = kvOf(r, "params"),
         metrics = kvOf(r, "metrics"),
         timestampMs = (r \ "info" \ "start_time").extract[Long],
-        artifacts = tags.collect {
-          case (k, v) if k.startsWith("graft.artifact.") =>
-            k.stripPrefix("graft.artifact.") -> v })
+        artifacts = TrackerWire.artifactsOf(tags))
     }
     require(rows.nonEmpty, "no experiment runs logged")
     spark.createDataFrame(rows).orderBy(col("timestampMs").desc)
   }
 
+  /** The run's `trial_metric` history: (step, value) in wire order. */
+  private def trialHistory(mlflowId: String): Seq[(Int, Double)] =
+    TrackerWire.items(http.get("metrics/get-history",
+      s"run_id=$mlflowId&metric_key=${TrackerWire.TrialMetric}") \ "metrics")
+      .map(m => ((m \ "step").extract[Int], (m \ "value").extract[Double]))
+
   override def logTrials(runId: String, trials: Seq[Trainer.Trial]): Unit = {
     val (mlflowId, _) = resolve(runId)
-    post("runs/log-batch", JObject(
+    // steps continue from the existing history, so a repeated call
+    // appends instead of overwriting trial 0's params tag
+    val offset = trialHistory(mlflowId).size
+    http.post("runs/log-batch", JObject(
       "run_id" -> JString(mlflowId),
       "metrics" -> JArray(trials.zipWithIndex.toList.map { case (t, i) =>
-        JObject("key" -> JString("trial_metric"), "value" -> JDouble(t.metric),
-          "timestamp" -> JInt(0), "step" -> JInt(i)) })))
+        JObject("key" -> JString(TrackerWire.TrialMetric), "value" -> JDouble(t.metric),
+          "timestamp" -> JInt(0), "step" -> JInt(offset + i)) })))
     trials.zipWithIndex.foreach { case (t, i) =>
-      setTag(mlflowId, s"graft.trial_params.$i", JsonMethods.compact(
-        JsonMethods.render(JObject(t.params.toList.map {
-          case (k, v) => k -> (JDouble(v): JValue) }))))
+      setTag(mlflowId, TrackerWire.trialParamsKey(offset + i), TrackerWire.encodeParams(t.params))
     }
   }
 
   override def trialsOf(runId: String): DataFrame = {
-    import spark.implicits._
     val (mlflowId, _) = resolve(runId)
-    val hist = (get("metrics/get-history",
-      s"run_id=$mlflowId&metric_key=trial_metric") \ "metrics") match {
-      case JArray(ms) => ms.map(m =>
-        ((m \ "step").extract[Int], (m \ "value").extract[Double]))
-      case _ => Seq.empty
-    }
     val run = searchRuns().find(r =>
       (r \ "info" \ "run_id").extract[String] == mlflowId).get
-    val tags = tagsOf(run)
-    hist.sortBy(_._1).map { case (i, metric) =>
-      val params = JsonMethods.parse(tags(s"graft.trial_params.$i")) match {
-        case JObject(fs) => fs.map { case (k, v) => k -> v.extract[Double] }.toMap
-        case _ => Map.empty[String, Double]
-      }
-      (i, params, metric)
-    }.toDF("trial", "params", "metric").orderBy(col("trial"))
+    TrackerWire.trials(spark, trialHistory(mlflowId), tagsOf(run))
   }
 
   // --- binary model-asset round-trip (reference orchestrator.py:
@@ -251,9 +216,6 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
   private def artifactsRel(mlflowId: String, name: String): String =
     s"experiments/$experimentId/runs/$mlflowId/artifacts/$name"
 
-  private def proxyUri(rel: String): URI =
-    URI.create(s"$base/api/2.0/mlflow-artifacts/artifacts/$rel")
-
   override def uploadArtifactDir(runId: String, name: String, localDir: String): Boolean = {
     val (mlflowId, _) = resolve(runId)
     val root = java.nio.file.Paths.get(localDir)
@@ -268,30 +230,19 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
     }
     files.foreach { f =>
       val rel = root.relativize(f).toString.replace(java.io.File.separatorChar, '/')
-      val req = HttpRequest.newBuilder(proxyUri(s"${artifactsRel(mlflowId, name)}/$rel"))
-        .PUT(HttpRequest.BodyPublishers.ofByteArray(java.nio.file.Files.readAllBytes(f)))
-        .build()
-      val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-      require(resp.statusCode() == 200,
-        s"mlflow artifact upload '$rel' failed: HTTP ${resp.statusCode()} ${resp.body().take(300)}")
+      proxy.send(s"/${artifactsRel(mlflowId, name)}/$rel", s"artifact upload '$rel'",
+        _.PUT(HttpRequest.BodyPublishers.ofByteArray(java.nio.file.Files.readAllBytes(f))),
+        HttpResponse.BodyHandlers.ofString())
     }
     true
   }
 
   override def downloadArtifactDir(runId: String, name: String, destDir: String): Boolean = {
     val (mlflowId, _) = resolve(runId)
-    def list(rel: String): Seq[(String, Boolean)] = {
-      val req = HttpRequest.newBuilder(
-        URI.create(s"$base/api/2.0/mlflow-artifacts/artifacts?path=$rel")).GET().build()
-      val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-      require(resp.statusCode() == 200,
-        s"mlflow artifact list '$rel' failed: HTTP ${resp.statusCode()} ${resp.body().take(300)}")
-      (JsonMethods.parse(resp.body()) \ "files") match {
-        case JArray(fs) => fs.map(f => ((f \ "path").extract[String],
-          (f \ "is_dir").extractOrElse[Boolean](false)))
-        case _ => Seq.empty
-      }
-    }
+    def list(rel: String): Seq[(String, Boolean)] =
+      TrackerWire.items(JsonMethods.parse(proxy.send(s"?path=$rel", s"artifact list '$rel'",
+        _.GET(), HttpResponse.BodyHandlers.ofString())) \ "files")
+        .map(f => ((f \ "path").extract[String], (f \ "is_dir").extractOrElse[Boolean](false)))
     // (remote rel under the artifact, local rel under destDir)
     def walk(rel: String, local: String): Seq[(String, String)] =
       list(rel).flatMap { case (child, isDir) =>
@@ -303,64 +254,24 @@ final class MlflowTracker(val spark: SparkSession, uri: String,
     if (entries.isEmpty) false
     else {
       entries.foreach { case (remoteRel, localRel) =>
-        val req = HttpRequest.newBuilder(proxyUri(remoteRel)).GET().build()
-        val resp = http.send(req, HttpResponse.BodyHandlers.ofByteArray())
-        require(resp.statusCode() == 200,
-          s"mlflow artifact download '$remoteRel' failed: HTTP ${resp.statusCode()}")
+        val bytes = proxy.send(s"/$remoteRel", s"artifact download '$remoteRel'", _.GET(),
+          HttpResponse.BodyHandlers.ofByteArray())
         val out = java.nio.file.Paths.get(destDir, localRel.split('/').toSeq: _*)
         java.nio.file.Files.createDirectories(out.getParent)
-        java.nio.file.Files.write(out, resp.body())
+        java.nio.file.Files.write(out, bytes)
       }
       true
     }
   }
 
-  override def logConfusionMatrix(runId: String, cm: DataFrame): Unit =
-    cm.write.mode("overwrite").parquet(s"${artifactDir(runId)}/confusion_matrix")
-
-  override def confusionMatrix(runId: String): DataFrame =
-    spark.read.parquet(s"${artifactDir(runId)}/confusion_matrix")
-
-  override def logCurve(runId: String, name: String, curve: EvalArtifacts.Curve): Unit = {
-    import spark.implicits._
-    val basePath = s"${artifactDir(runId)}/curves/$name"
-    curve.frame.write.mode("overwrite").parquet(s"$basePath/data")
-    Seq((curve.chart, curve.xLabel, curve.yLabel))
-      .toDF("chart", "x_label", "y_label")
-      .write.mode("overwrite").parquet(s"$basePath/meta")
-  }
-
-  override def curve(runId: String, name: String): EvalArtifacts.Curve = {
-    val basePath = s"${artifactDir(runId)}/curves/$name"
-    val meta = spark.read.parquet(s"$basePath/meta").head()
-    EvalArtifacts.Curve(meta.getAs[String]("chart"), meta.getAs[String]("x_label"),
-      meta.getAs[String]("y_label"), spark.read.parquet(s"$basePath/data"))
-  }
-
-  override def curveNames(runId: String): Seq[String] = {
-    val d = new java.io.File(s"${artifactDir(runId)}/curves")
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().filter(_.isDirectory).map(_.getName).toSeq.sorted
-  }
-
   override def logStage(runId: String, stage: String, seq: Long): Unit = {
     val (mlflowId, _) = resolve(runId)
-    setTag(mlflowId, s"graft.stage.$seq", stage)
+    setTag(mlflowId, TrackerWire.stageKey(seq), stage)
   }
 
-  override def stageLog(): DataFrame = {
-    val rows = searchRuns().flatMap { r =>
-      val graftId = tagsOf(r).getOrElse("graft.run_id", "")
-      tagsOf(r).collect {
-        case (k, v) if k.startsWith("graft.stage.") =>
-          Row(graftId, v, k.stripPrefix("graft.stage.").toLong)
-      }
-    }
-    spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("runId", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("stage", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType))))
-  }
+  override def stageLog(): DataFrame =
+    TrackerBackend.stageFrame(spark, searchRuns().flatMap { r =>
+      val tags = tagsOf(r)
+      TrackerWire.stagesOf(tags.getOrElse(TrackerWire.RunId, ""), tags)
+    })
 }

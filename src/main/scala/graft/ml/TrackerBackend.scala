@@ -1,16 +1,27 @@
 package graft.ml
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import ExperimentTracker.Run
 
 /** Pluggable experiment-tracking backend (reference:
   * src/training/tracking/orchestrator.py:38 TrackerRegistry — the seam
-  * that registers comet/mlflow tracker factories by name; here the two
-  * public impls are the parquet log and an in-memory store for tests).
+  * that registers comet/mlflow tracker factories by name). Four
+  * backends ship, each supplying only its own store:
+  *  - [[ParquetTracker]]: runs, trials and stages as parquet tables
+  *    under one directory; artifacts through [[FileRunArtifacts]];
+  *  - [[InMemoryTracker]]: driver-side collections, for tests;
+  *  - [[MlflowTracker]] and [[CometTracker]]: runs, trials and stages
+  *    over each server's REST wire (shared client and tag codec in
+  *    [[TrackerWire]]); artifacts through [[FileRunArtifacts]] under a
+  *    local per-run root.
   *
   * Everything a tracker stores is queryable as DataFrames; the
   * selection rules ([[bestRun]]/[[bestDeployableRun]]) are default
@@ -22,6 +33,8 @@ trait TrackerBackend {
   def logRun(run: Run): Unit
   /** All runs, most recent first. */
   def listRuns(): DataFrame
+  /** A repeated call for one run appends: its trial indices continue
+    * from the trials already logged. */
   def logTrials(runId: String, trials: Seq[Trainer.Trial]): Unit
   /** A run's logged search trials, in trial order. */
   def trialsOf(runId: String): DataFrame
@@ -104,68 +117,134 @@ trait TrackerBackend {
     listRuns().limit(maxRuns).as[Run](Encoders.product[Run]).collect()
 }
 
-/** The parquet-backed tracker — [[ExperimentTracker]]'s append-only
-  * layout behind the backend trait. Curves live under
-  * `dir/curves/<runId>/<name>` (data columns + constant metadata
-  * columns); stages under `dir/stages`.
-  */
-final class ParquetTracker(val spark: SparkSession, dir: String) extends TrackerBackend {
-  import org.apache.hadoop.fs.Path
-
-  override def logRun(run: Run): Unit = ExperimentTracker.logRun(spark, dir, run)
-  override def listRuns(): DataFrame = ExperimentTracker.listRuns(spark, dir)
-  override def logTrials(runId: String, trials: Seq[Trainer.Trial]): Unit =
-    ExperimentTracker.logTrials(spark, dir, runId, trials)
-  override def trialsOf(runId: String): DataFrame =
-    ExperimentTracker.trialsOf(spark, dir, runId)
-  override def logConfusionMatrix(runId: String, cm: DataFrame): Unit =
-    ExperimentTracker.logConfusionMatrix(dir, runId, cm)
-  override def confusionMatrix(runId: String): DataFrame =
-    ExperimentTracker.confusionMatrix(spark, dir, runId)
-
-  // curve layout: data frame at .../<name>/data, axis metadata as a
-  // 1-row sidecar at .../<name>/meta — metadata must survive row-free
-  // so an EMPTY curve frame (e.g. calibration over an empty split)
-  // still round-trips with its chart kind and labels
-  override def logCurve(runId: String, name: String, curve: EvalArtifacts.Curve): Unit = {
+object TrackerBackend {
+  /** A trials frame: (trial, params, metric) in trial order. */
+  def trialFrame(spark: SparkSession, rows: Seq[(Int, Map[String, Double], Double)]): DataFrame = {
     import spark.implicits._
-    val base = s"$dir/curves/$runId/$name"
+    rows.toDF("trial", "params", "metric").orderBy(col("trial"))
+  }
+
+  /** A stage-log frame: (runId, stage, seq), the one stage-log schema. */
+  def stageFrame(spark: SparkSession, rows: Seq[(String, String, Long)]): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromTuple).asJava, StructType(Seq(
+      StructField("runId", StringType), StructField("stage", StringType),
+      StructField("seq", LongType, nullable = false))))
+}
+
+/** Confusion matrices and curves as parquet files under per-run paths:
+  * the artifact layout the parquet, MLflow and Comet backends share.
+  * A curve is its data frame at `<curvesDir>/<name>/data` plus a 1-row
+  * axis-metadata sidecar at `<curvesDir>/<name>/meta`, so that an EMPTY
+  * curve frame (e.g. calibration over an empty split) still round-trips
+  * with its chart kind and labels.
+  */
+trait FileRunArtifacts extends TrackerBackend {
+  /** The directory holding `runId`'s confusion matrix. */
+  protected def confusionMatrixPath(runId: String): String
+  /** The directory holding `runId`'s curves, one subdirectory each. */
+  protected def curvesDir(runId: String): String
+
+  override def logConfusionMatrix(runId: String, cm: DataFrame): Unit =
+    cm.write.mode("overwrite").parquet(confusionMatrixPath(runId))
+
+  override def confusionMatrix(runId: String): DataFrame =
+    spark.read.parquet(confusionMatrixPath(runId))
+
+  override def logCurve(runId: String, name: String, curve: EvalArtifacts.Curve): Unit = {
+    val base = s"${curvesDir(runId)}/$name"
     curve.frame.write.mode("overwrite").parquet(s"$base/data")
-    Seq((curve.chart, curve.xLabel, curve.yLabel))
+    spark.createDataFrame(Seq((curve.chart, curve.xLabel, curve.yLabel)))
       .toDF("chart", "x_label", "y_label")
       .write.mode("overwrite").parquet(s"$base/meta")
   }
 
   override def curve(runId: String, name: String): EvalArtifacts.Curve = {
-    val base = s"$dir/curves/$runId/$name"
+    val base = s"${curvesDir(runId)}/$name"
     val meta = spark.read.parquet(s"$base/meta").head()
     EvalArtifacts.Curve(meta.getAs[String]("chart"), meta.getAs[String]("x_label"),
       meta.getAs[String]("y_label"), spark.read.parquet(s"$base/data"))
   }
 
   override def curveNames(runId: String): Seq[String] = {
-    val p = new Path(s"$dir/curves/$runId")
+    val p = new Path(curvesDir(runId))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
   }
+}
 
-  override def logStage(runId: String, stage: String, seq: Long): Unit = {
+/** The durable parquet log. Layout under `dir`:
+  *  - `runs/`: one row per run;
+  *  - `trials/runId=<id>/`: a run's search trials;
+  *  - `confusion_matrix/runId=<id>/`: a run's confusion matrix;
+  *  - `curves/<id>/<name>/{data,meta}`: a run's curves;
+  *  - `stages/`: the stage log.
+  * `<id>` is escaped as Spark escapes a partition value, so a run's
+  * paths are where a `partitionBy("runId")` write into the table puts
+  * them.
+  */
+final class ParquetTracker(val spark: SparkSession, dir: String) extends FileRunArtifacts {
+  private def runPartition(table: String, runId: String): String =
+    s"$dir/$table/runId=${escapePathName(runId)}"
+
+  private def exists(path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  protected def confusionMatrixPath(runId: String): String =
+    runPartition("confusion_matrix", runId)
+  protected def curvesDir(runId: String): String = s"$dir/curves/${escapePathName(runId)}"
+
+  override def logRun(run: Run): Unit = {
     import spark.implicits._
-    Seq((runId, stage, seq)).toDF("runId", "stage", "seq")
-      .write.mode("append").parquet(s"$dir/stages")
+    Seq(run).toDF().write.mode("append").parquet(s"$dir/runs")
   }
 
-  override def stageLog(): DataFrame = {
-    val p = new Path(s"$dir/stages")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(p.toString)
-    else spark.createDataFrame(java.util.Collections.emptyList[Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("runId", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("stage", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType))))
+  /** All runs, most recent first. Reads BOTH storage layouts: the
+    * current `dir/runs` and the legacy one (run parquet files directly
+    * under `dir`, written before trials/artifacts landed), with the
+    * Run schema imposed so pre-`artifacts` logs decode (missing column
+    * → empty map) instead of failing `.as[Run]`.
+    */
+  override def listRuns(): DataFrame = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val legacy =
+      if (!fs.exists(root)) Array.empty[String]
+      else fs.listStatus(root).filter(st => st.isFile &&
+        st.getPath.getName.endsWith(".parquet")).map(_.getPath.toString)
+    val parts = (if (exists(s"$dir/runs")) Seq(s"$dir/runs") else Nil) ++ legacy.toSeq
+    require(parts.nonEmpty, s"no experiment runs found under $dir")
+    spark.read.schema(Encoders.product[Run].schema).parquet(parts: _*)
+      .withColumn("artifacts",
+        coalesce(col("artifacts"), map().cast("map<string,string>")))
+      .orderBy(col("timestampMs").desc)
   }
+
+  // the offset read runs only when the run already has trials, so a
+  // fresh run id (all the pipeline logs) costs no extra Spark job
+  override def logTrials(runId: String, trials: Seq[Trainer.Trial]): Unit = {
+    import spark.implicits._
+    val part = runPartition("trials", runId)
+    val offset = if (exists(part)) spark.read.parquet(part).count().toInt else 0
+    trials.zipWithIndex.map { case (t, i) => (offset + i, t.params, t.metric) }
+      .toDF("trial", "params", "metric").write.mode("append").parquet(part)
+  }
+
+  override def trialsOf(runId: String): DataFrame = {
+    val part = runPartition("trials", runId)
+    if (exists(part)) spark.read.parquet(part).orderBy(col("trial"))
+    else TrackerBackend.trialFrame(spark, Nil)
+  }
+
+  override def logStage(runId: String, stage: String, seq: Long): Unit =
+    TrackerBackend.stageFrame(spark, Seq((runId, stage, seq)))
+      .write.mode("append").parquet(s"$dir/stages")
+
+  override def stageLog(): DataFrame =
+    if (exists(s"$dir/stages")) spark.read.parquet(s"$dir/stages")
+    else TrackerBackend.stageFrame(spark, Nil)
 }
 
 /** In-memory tracker for tests and notebook-scale use: same contract,
@@ -186,11 +265,10 @@ final class InMemoryTracker(val spark: SparkSession) extends TrackerBackend {
     spark.createDataFrame(runs.toSeq).orderBy(col("timestampMs").desc)
   }
   override def logTrials(runId: String, ts: Seq[Trainer.Trial]): Unit =
-    synchronized { trials(runId) = ts }
+    synchronized { trials(runId) = trials.getOrElse(runId, Seq.empty) ++ ts }
   override def trialsOf(runId: String): DataFrame = synchronized {
-    import spark.implicits._
-    trials(runId).zipWithIndex.map { case (t, i) => (i, t.params, t.metric) }
-      .toDF("trial", "params", "metric").orderBy(col("trial"))
+    TrackerBackend.trialFrame(spark,
+      trials(runId).zipWithIndex.map { case (t, i) => (i, t.params, t.metric) })
   }
   override def logConfusionMatrix(runId: String, cm: DataFrame): Unit =
     synchronized { cms(runId) = cm }
@@ -203,17 +281,14 @@ final class InMemoryTracker(val spark: SparkSession) extends TrackerBackend {
     synchronized { curves.keys.filter(_._1 == runId).map(_._2).toSeq.sorted }
   override def logStage(runId: String, stage: String, seq: Long): Unit =
     synchronized { stages += ((runId, stage, seq)) }
-  override def stageLog(): DataFrame = synchronized {
-    import spark.implicits._
-    stages.toSeq.toDF("runId", "stage", "seq")
-  }
+  override def stageLog(): DataFrame = synchronized { TrackerBackend.stageFrame(spark, stages.toSeq) }
 }
 
 /** Backend factories by name (reference: orchestrator.py:38
-  * TrackerRegistry.register). `parquet` and `memory` ship built in;
-  * users register their own with [[register]]. Memory instances are
-  * shared per (name-independent) URI so the writer and a later reader
-  * get the same store.
+  * TrackerRegistry.register). `parquet`, `memory`, `mlflow` and
+  * `comet` ship built in; users register their own with [[register]].
+  * Memory instances are shared per (name-independent) URI so the writer
+  * and a later reader get the same store.
   */
 object TrackerRegistry {
   type Factory = (SparkSession, String) => TrackerBackend

@@ -24,12 +24,14 @@ import graft.split.Splits
   *     so `reports` and [[Champion.select]]'s tie-break do not depend on
   *     which lane finishes first;
   *   - after threshold tuning, three lanes: the validation metrics;
-  *     every tracker write, on one lane in a fixed order, because the
-  *     parquet tracker appends to shared tables (`runs`, `stages`) whose
-  *     `_temporary` directory concurrent appends would share; and
-  *     persistence (`valid_in` alongside the champion bundle, then batch
-  *     scoring);
-  *   - the champion run's logRun, register and promote follow the join.
+  *     every tracker write, on one lane in a fixed order, because each
+  *     search run's logRun appends to the parquet tracker's shared
+  *     `runs` table, whose `_temporary` directory concurrent appends
+  *     would share (trials, the confusion matrix and curves go to
+  *     per-run paths); and persistence (`valid_in` alongside the
+  *     champion bundle, then batch scoring through that bundle);
+  *   - the champion run's logRun and its `stages` entries (register,
+  *     promote) follow the join, on the caller's thread.
   * Results do not change: every lane runs the same deterministic jobs.
   *
   * Trade-off: concurrent fits hold each model's internal cache at once
@@ -236,10 +238,15 @@ object TrainPipeline {
         // via Deployment.load in a fresh session
         () => if (multiclass) Champion.save(c.model, s"$dir/champion")
           else Deployment.save(spark, dir, c.model, calibrator, tuned)))
+      // binary: the same calibrated score and tuned cut as the bundle
+      // saved next to it, under the file's `pos_prob` name
       if (multiclass) Champion.batchPredictMulticlass(spark, c.model, s"$dir/valid_in",
         s"$dir/valid_scored", cfg.featureArrayCol)
-      else Champion.batchPredict(spark, c.model, s"$dir/valid_in", s"$dir/valid_scored",
-        cfg.featureArrayCol)
+      else Deployment.Bundle(c.model, calibrator, tuned)
+        .score(spark.read.parquet(s"$dir/valid_in"), cfg.featureArrayCol)
+        .select(col(cfg.pkCol), col("label"), col(cfg.featureArrayCol), col("prediction"),
+          col("score").as("pos_prob"))
+        .write.mode("overwrite").parquet(s"$dir/valid_scored")
     }
     val metrics = Lanes.all(Seq[() => Any](metricsLane, trackerLane, persistLane))
       .head.asInstanceOf[Map[String, Double]]

@@ -241,6 +241,12 @@ class MlflowTrackerSpec extends SparkSpec {
     } finally stub.stop()
   }
 
+  test("second logTrials call appends steps instead of restarting at 0") {
+    val stub = new Stub
+    try TrackerScenarios.repeatedLogTrials(new MlflowTracker(spark, stub.url))
+    finally stub.stop()
+  }
+
   test("runs/search pagination: listRuns and per-run lookups span pages") {
     val stub = new Stub
     try {

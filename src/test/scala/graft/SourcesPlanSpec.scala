@@ -441,31 +441,31 @@ class SourcesPlanSpec extends SparkSpec {
   }
 
   test("experiment tracker logs runs and picks the best by metric") {
-    import graft.ml.ExperimentTracker
+    import graft.ml.ParquetTracker
     import graft.ml.ExperimentTracker.Run
     val dir = tmp() + "/runs"
-    ExperimentTracker.logRun(spark, dir, Run("r1", "lr", Map("reg" -> 0.1), Map("auc" -> 0.81), 1000L))
-    ExperimentTracker.logRun(spark, dir, Run("r2", "gbt", Map("depth" -> 4), Map("auc" -> 0.93), 2000L))
-    ExperimentTracker.logRun(spark, dir, Run("r3", "rf", Map("trees" -> 10), Map("auc" -> 0.88), 3000L))
-    assert(ExperimentTracker.listRuns(spark, dir).count() == 3)
-    assert(ExperimentTracker.bestRun(spark, dir, "auc", maxRuns = 10).map(_.runId).contains("r2"))
+    new ParquetTracker(spark, dir).logRun(Run("r1", "lr", Map("reg" -> 0.1), Map("auc" -> 0.81), 1000L))
+    new ParquetTracker(spark, dir).logRun(Run("r2", "gbt", Map("depth" -> 4), Map("auc" -> 0.93), 2000L))
+    new ParquetTracker(spark, dir).logRun(Run("r3", "rf", Map("trees" -> 10), Map("auc" -> 0.88), 3000L))
+    assert(new ParquetTracker(spark, dir).listRuns().count() == 3)
+    assert(new ParquetTracker(spark, dir).bestRun("auc", maxRuns = 10).map(_.runId).contains("r2"))
     // bounded lookback: only the 1 most recent run is considered
-    assert(ExperimentTracker.bestRun(spark, dir, "auc", maxRuns = 1).map(_.runId).contains("r3"))
+    assert(new ParquetTracker(spark, dir).bestRun("auc", maxRuns = 1).map(_.runId).contains("r3"))
   }
 
   test("tracker logs artifacts: confusion matrix frame and model path per run") {
-    import graft.ml.ExperimentTracker
+    import graft.ml.ParquetTracker
     import graft.ml.ExperimentTracker.Run
     val dir = tmp() + "/runs_art"
-    ExperimentTracker.logRun(spark, dir,
+    new ParquetTracker(spark, dir).logRun(
       Run("r1", "lr", Map("reg" -> 0.1), Map("auc" -> 0.9), 1000L,
         artifacts = Map("model" -> "/models/r1", "roc_png" -> "/figs/r1.png")))
     val cm = Seq((1, 1, 40L), (0, 0, 50L), (1, 0, 7L), (0, 1, 3L)).toDF("label", "pred", "n")
-    ExperimentTracker.logConfusionMatrix(dir, "r1", cm)
-    ExperimentTracker.logConfusionMatrix(dir, "r2", cm.withColumn("n", $"n" * 2))
-    val run = ExperimentTracker.bestRun(spark, dir, "auc", 10).get
+    new ParquetTracker(spark, dir).logConfusionMatrix("r1", cm)
+    new ParquetTracker(spark, dir).logConfusionMatrix("r2", cm.withColumn("n", $"n" * 2))
+    val run = new ParquetTracker(spark, dir).bestRun("auc", 10).get
     assert(run.artifacts("model") == "/models/r1")
-    val back = ExperimentTracker.confusionMatrix(spark, dir, "r1")
+    val back = new ParquetTracker(spark, dir).confusionMatrix("r1")
     assert(back.count() == 4)
     assert(back.agg(sum($"n")).head().getLong(0) == 100L) // r2's doubled rows pruned out
   }

@@ -359,6 +359,13 @@ class TrainerSpec extends SparkSpec {
     assert(res.tunedThreshold > 0.0 && res.tunedThreshold < 1.0)
     val scored = spark.read.parquet(s"$dir/a/valid_scored")
     assert(scored.count() > 0 && scored.columns.contains("pos_prob"))
+    // valid_scored is what the bundle saved next to it scores on valid_in
+    // (calibrated score, tuned cut), row for row
+    val bundleScored = Deployment.load(spark, s"$dir/a")
+      .score(spark.read.parquet(s"$dir/a/valid_in"), "arr")
+    def byId(df: DataFrame, scoreCol: String) = df.select($"id", col(scoreCol), $"prediction")
+      .as[(Long, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(byId(scored, "pos_prob") == byId(bundleScored, "score"))
     val again = runs(1)
     assert(again.champion.map(c => (c.name, c.metric)) == res.champion.map(c => (c.name, c.metric)))
     assert(again.reports == res.reports)
@@ -422,7 +429,7 @@ class TrainerSpec extends SparkSpec {
   }
 
   test("TrainPipeline with halving search, calibration, and tracker wired in") {
-    import graft.ml.{ExperimentTracker, TrainPipeline}
+    import graft.ml.{ParquetTracker, TrainPipeline}
     val data = blobs.select($"id", $"label", $"arr")
     val dir = java.nio.file.Files.createTempDirectory("graft-track").toString
     val res = TrainPipeline.run(spark, data,
@@ -436,12 +443,12 @@ class TrainerSpec extends SparkSpec {
     assert(res.validMetrics("roc_auc") > 0.9)
     // tracker got the search run + the deployable champion run (with
     // model artifact), plus the champion's confusion matrix
-    assert(ExperimentTracker.listRuns(spark, dir).count() == 2)
+    assert(new ParquetTracker(spark, dir).listRuns().count() == 2)
     assert(res.runTag.nonEmpty)
-    assert(ExperimentTracker.bestDeployableRun(spark, dir, "valid_auc", 10)
+    assert(new ParquetTracker(spark, dir).bestDeployableRun("valid_auc", 10)
       .exists(r => r.runId == s"champion_${res.runTag}" &&
         r.artifacts("model").endsWith("/champion")))
-    val cm = ExperimentTracker.confusionMatrix(spark, dir, s"champion_${res.runTag}")
+    val cm = new ParquetTracker(spark, dir).confusionMatrix(s"champion_${res.runTag}")
     val cmTotal = cm.agg(sum($"n")).head().getLong(0)
     assert(cmTotal > 0 && cmTotal < data.count()) // covers exactly the valid split
     // the calibrator ships with the champion and round-trips: the tuned
@@ -593,8 +600,8 @@ class TrainerSpec extends SparkSpec {
     assert(t.runIdsAtStage(ModelRegistry.Champion).size == 1)
     // archived runs are no longer deployable even though still best-by-metric eligible
     assert(t.bestDeployableRun("valid_auc", 10).exists(_.runId == s"champion_${r2.runTag}"))
-    // ... including through the legacy ExperimentTracker surface (one ranking rule)
-    assert(ExperimentTracker.bestDeployableRun(spark, trackDir, "valid_auc", 10)
+    // ... including through a second tracker over the same dir (one ranking rule)
+    assert(new ParquetTracker(spark, trackDir).bestDeployableRun("valid_auc", 10)
       .exists(_.runId == s"champion_${r2.runTag}"))
     // the staged champion's bundle loads and scores identically to its saved dir
     val bundle = ModelRegistry.loadChampionBundle(t).get
@@ -611,7 +618,7 @@ class TrainerSpec extends SparkSpec {
   }
 
   test("config validation rejects nonsense; tracker keeps every search trial") {
-    import graft.ml.{ExperimentTracker, TrainConfig, TrainPipeline}
+    import graft.ml.{ParquetTracker, TrainConfig, TrainPipeline}
     val good = TrainPipeline.Config("label", "id", "arr")
     assert(TrainConfig.validate(good) eq good)
     def bad(f: TrainPipeline.Config => TrainPipeline.Config): Unit =
@@ -627,8 +634,8 @@ class TrainerSpec extends SparkSpec {
     val res = Trainer.randomSearch(Trainer.LogReg,
       Seq(Trainer.ParamRange("regParam", 1e-4, 1.0, log = true)), train, valid, 3, 7L)
     val dir = java.nio.file.Files.createTempDirectory("graft-trials").toString
-    ExperimentTracker.logTrials(spark, dir, "r1", res.trials)
-    val back = ExperimentTracker.trialsOf(spark, dir, "r1").collect()
+    new ParquetTracker(spark, dir).logTrials("r1", res.trials)
+    val back = new ParquetTracker(spark, dir).trialsOf("r1").collect()
     assert(back.length == 3)
     assert(back.map(_.getAs[Double]("metric")).toSeq == res.trials.map(_.metric))
     // malformed range grids fail fast with the config error type, not MatchError
@@ -637,20 +644,20 @@ class TrainerSpec extends SparkSpec {
   }
 
   test("listRuns reads the legacy layout (runs at dir root, no artifacts column)") {
-    import graft.ml.ExperimentTracker
+    import graft.ml.{ExperimentTracker, ParquetTracker}
     val dir = java.nio.file.Files.createTempDirectory("graft-legacy").toString
     // a pre-artifacts log: parquet directly under dir, old Run schema
     Seq(("old_run", "logreg", Map("regParam" -> 0.1), Map("valid_auc" -> 0.9), 100L))
       .toDF("runId", "model", "params", "metrics", "timestampMs")
       .write.mode("append").parquet(dir)
     // plus a current-layout run
-    ExperimentTracker.logRun(spark, dir, ExperimentTracker.Run(
+    new ParquetTracker(spark, dir).logRun(ExperimentTracker.Run(
       "new_run", "rf", Map.empty, Map("valid_auc" -> 0.95), 200L,
       artifacts = Map("model" -> "/tmp/m")))
-    val runs = ExperimentTracker.listRuns(spark, dir).as[ExperimentTracker.Run].collect()
+    val runs = new ParquetTracker(spark, dir).listRuns().as[ExperimentTracker.Run].collect()
     assert(runs.map(_.runId).toSeq == Seq("new_run", "old_run")) // recent first
     assert(runs.find(_.runId == "old_run").get.artifacts == Map.empty)
-    assert(ExperimentTracker.bestRun(spark, dir, "valid_auc", 10).get.runId == "new_run")
+    assert(new ParquetTracker(spark, dir).bestRun("valid_auc", 10).get.runId == "new_run")
   }
 
   test("evaluateSplits reports metrics and class distribution per split") {
