@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -255,14 +255,9 @@ object Dedup {
     */
   def incrementalDedupBanded(newDf: DataFrame, oldDf: DataFrame, idCol: String,
       textCol: String, n: Int, b: Int, r: Int, seed: Long,
-      threshold: Double): DataFrame = {
-    val pairs = minhashNearDupBipartiteBanded(
-      newDf, oldDf, idCol, textCol, n, b, r, seed, threshold)
-    val best = pairs
-      .groupBy(col("id_new"))
-      .agg(max_by(col("id_old"), struct(col("jaccard"), -col("id_old"))).as("dup_of"))
-    newDf.join(best, newDf(idCol) === best("id_new"), "left").drop("id_new")
-  }
+      threshold: Double): DataFrame =
+    bestMatch(newDf, idCol, minhashNearDupBipartiteBanded(
+      newDf, oldDf, idCol, textCol, n, b, r, seed, threshold))
 
   /** INCREMENTAL dedup — the library seat behind q_dedup_incremental:
     * returns the new batch with a `dup_of` column (the old-corpus id
@@ -273,9 +268,15 @@ object Dedup {
     * the corpus. Same bounded-candidate shape as the self-join path.
     */
   def incrementalDedup(newDf: DataFrame, oldDf: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double): DataFrame = {
-    val pairs = jaccardJoinBipartite(
-      shingled(newDf, idCol, textCol, n), shingled(oldDf, idCol, textCol, n), threshold)
+      textCol: String, n: Int, threshold: Double): DataFrame =
+    bestMatch(newDf, idCol, jaccardJoinBipartite(
+      shingled(newDf, idCol, textCol, n), shingled(oldDf, idCol, textCol, n), threshold))
+
+  /** `newDf` with `dup_of`: per new id, the old id of its best verified
+    * (id_new, id_old, jaccard) pair — highest Jaccard, then smallest
+    * old id; null when it has none.
+    */
+  private def bestMatch(newDf: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val best = pairs
       .groupBy(col("id_new"))
       .agg(max_by(col("id_old"), struct(col("jaccard"), -col("id_old"))).as("dup_of"))
@@ -464,34 +465,6 @@ object Dedup {
       array_min(transform(hashesCol, h => (p.getField("a") * h + p.getField("b")) % P)))
   }
 
-  /** LSH candidate pairs from banded signatures (r=1: one signature
-    * value per band). Join key is (band index, band value) — balanced
-    * shuffle; distinct pairs with id_a < id_b.
-    */
-  def lshCandidates(sig: DataFrame): DataFrame = {
-    val banded = sig.select(col("id"), posexplode(col("sig")).as(Seq("band", "v")))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.v") === col("y.v") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-  }
-
-  /** LSH candidates with b bands of r rows — the S-curve knob r=1
-    * lacks. A pair collides in one band iff ALL r signature values in
-    * it match, so P(candidate | J) = 1 − (1 − J^r)^b: background pairs
-    * (small J) are suppressed ~J^r while pairs above the threshold
-    * keep near-1 recall with enough bands. r=1 over-generates on ANY
-    * corpus with nonzero background similarity — the sf10 decade
-    * measured it: 3-gram shingle types live in a ~26³ space, so even
-    * content-disjoint replicas share background shingles, P(some
-    * minhash of 32 matches) approaches 1, and candidates go quadratic.
-    * At r=2, the same background J≈0.05 collides a band with prob
-    * J²=0.0025 — a 30× candidate cut for a recall cost bounded by
-    * (1−t^r)^b (pick b accordingly; planted-pair recall spec'd in the
-    * dedup suite). The band key is xxhash64(band values) — an 8-byte
-    * shuffle key regardless of r.
-    */
   /** (id, band, v) fan-out of an (id, sig) frame into b bands of r
     * consecutive signature slots, band key = xxhash64 of the slice.
     * Guards the band geometry per row: a signature shorter than b*r
@@ -513,6 +486,21 @@ object Dedup {
         i => xxhash64(lit(42L), slice(checkedSig, i * lit(r) + lit(1), lit(r))))).as(Seq("band", "v")))
   }
 
+  /** LSH candidates with b bands of r rows — the S-curve knob r=1
+    * lacks. A pair collides in one band iff ALL r signature values in
+    * it match, so P(candidate | J) = 1 − (1 − J^r)^b: background pairs
+    * (small J) are suppressed ~J^r while pairs above the threshold
+    * keep near-1 recall with enough bands. r=1 over-generates on ANY
+    * corpus with nonzero background similarity — the sf10 decade
+    * measured it: 3-gram shingle types live in a ~26³ space, so even
+    * content-disjoint replicas share background shingles, P(some
+    * minhash of 32 matches) approaches 1, and candidates go quadratic.
+    * At r=2, the same background J≈0.05 collides a band with prob
+    * J²=0.0025 — a 30× candidate cut for a recall cost bounded by
+    * (1−t^r)^b (pick b accordingly; planted-pair recall spec'd in the
+    * dedup suite). The band key is xxhash64(band values) — an 8-byte
+    * shuffle key regardless of r. Distinct pairs with id_a < id_b.
+    */
   def lshCandidatesBanded(sig: DataFrame, b: Int, r: Int): DataFrame = {
     val banded = bandedSigRows(sig, b, r)
     banded.as("x").join(banded.as("y"),
@@ -522,10 +510,11 @@ object Dedup {
       .distinct()
   }
 
-  /** [[minhashNearDup]] with (b, r) banding: candidates via
-    * [[lshCandidatesBanded]] (background-pruned), then exact Jaccard
-    * verification — the corpus-scale configuration. Requires
-    * numPerm == b*r.
+  /** MinHash+LSH near-dup pairs with b bands of r signature slots
+    * (b·r permutations): candidates via [[lshCandidatesBanded]], then
+    * exact Jaccard verification. [[minhashNearDup]] is its r = 1
+    * geometry; r > 1 prunes background candidates, the corpus-scale
+    * configuration.
     */
   def minhashNearDupBanded(
       df: DataFrame, idCol: String, textCol: String,
@@ -541,23 +530,18 @@ object Dedup {
     releaseAfter(verifyJaccard(cands, sh, threshold), sig, sh, candsRaw)
   }
 
-  /** MinHash+LSH near-dup pipeline: signatures → banded candidates →
-    * exact Jaccard verification (join back to shingle sets) → threshold.
-    * With numPerm bands of r=1, a pair at J≥t is missed with prob
-    * (1-t)^numPerm — at t=0.6, numPerm=64 that is ~1e-26, i.e. the
-    * output equals the exact join for any realistic dataset while the
-    * candidate step stays sub-quadratic on real (non-adversarial) data.
+  /** MinHash+LSH near-dup pipeline: [[minhashNearDupBanded]] with
+    * numPerm bands of r=1 (each band key hashes one signature slot). A
+    * pair at J≥t is missed with prob (1-t)^numPerm — at t=0.6,
+    * numPerm=64 that is ~1e-26, i.e. the output equals the exact join
+    * for any realistic dataset while the candidate step stays
+    * sub-quadratic on real (non-adversarial) data.
     */
   def minhashNearDup(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, numPerm: Int, seed: Long, threshold: Double): DataFrame = {
-    val sh = shingled(df, idCol, textCol, n).persist(StorageLevel.MEMORY_AND_DISK)
-    val sig = sh.withColumn("hs", shingleHashes(col("sh")))
-      .select(col("id"), minhashSignature(col("hs"), permCoeffs(numPerm, seed)).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cands = lshCandidates(sig)
-    releaseAfter(verifyJaccard(cands, sh, threshold), sig, sh)
-  }
+      n: Int, numPerm: Int, seed: Long, threshold: Double): DataFrame =
+    minhashNearDupBanded(df, idCol, textCol, n, b = numPerm, r = 1, seed = seed,
+      threshold = threshold)
 
   /** 60-bit SimHash over whitespace tokens: per bit, sum +1/-1 by each
     * token's hash bit; bit set iff the sum is non-negative. Delegates
@@ -676,100 +660,106 @@ object Dedup {
       .distinct()
   }
 
+  /** Edge count at or below which components finish on the driver:
+    * 1,000,000 (u, v) long pairs are ~16 MB, the same order as
+    * SaltedRuns' 1,000,000-row hot-key threshold.
+    */
+  private val DriverEdges = 1000000
+
+  /** Safety cap on star rounds: in practice they grow like log n (the
+    * 100-node chain takes 8), so reaching 100 means a bug, not a big
+    * graph.
+    */
+  private val MaxStarRounds = 100
+
   /** Near-dup CLUSTER formation: connected components over candidate
     * pairs, labeling every id with the minimum id of its component —
     * the step that turns pairwise near-dup hits into "keep one doc per
     * cluster" decisions in a corpus-dedup pipeline.
     *
-    * Iterative min-label propagation: each round, every node takes the
-    * min of its own label and its neighbors' labels — ONE join + ONE
-    * groupBy shuffle per round, converging in O(component diameter)
-    * rounds (near-dup clusters are dense, so diameters are tiny; at
-    * 100 TB with adversarially long chains, switch to large-star/
-    * small-star which squares the label-jump per round). Every round is
-    * localCheckpointed: lineage stays flat, nothing recomputes.
+    * The edges are canonicalised (larger id, smaller id) without
+    * self-loops or repeats. Near-dup pairs are few next to their
+    * corpus, so one bounded collect usually takes them all; a driver
+    * union-find rooted at min ids labels them, and the labels join
+    * back to `ids`. Edge sets above the driver bound stay a supported
+    * input: large-star / small-star rounds (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014) keep every
+    * component, never add edges and reach the min id in O(log² n)
+    * rounds even on long chains. They stop once the round's one count
+    * falls to the bound, and the driver finishes; a star forest that
+    * converges above it labels each node from its star edge.
     *
     * @param ids   frame carrying `idCol` (one row per doc)
-    * @param pairs (id_a, id_b) candidate/verified near-dup pairs
-    * @return (id, cluster) — singletons keep cluster = id
+    * @param pairs (id_a, id_b) candidate/verified near-dup pairs; ids
+    *              found only in pairs still connect components
+    * @return (id: long, cluster: long) per row of `ids` — cluster is
+    *         the component's min id; singletons keep cluster = id
     */
-  def dupClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
-    var labels = ids.select(col(idCol).cast("long").as("id"))
-      .withColumn("cluster", col("id")).localCheckpoint()
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("cluster")).as("nmin"))
-      // the round's checkpoint carries BOTH the old and the new label,
-      // so the convergence count is a filter over the materialized
-      // frame — not (as through r7) a second id-join per round
-      val step = labels.join(neighborMin, labels("id") === neighborMin("src"), "left")
-        .select(labels("id"), labels("cluster").as("__old"),
-          least(labels("cluster"), coalesce(col("nmin"), labels("cluster"))).as("cluster"))
-        .localCheckpoint()
-      changed = step.filter(col("cluster") =!= col("__old")).count()
-      labels = step.select(col("id"), col("cluster"))
-      it += 1
-    }
-    // partially-propagated labels are WRONG labels (a long chain would
-    // silently split one component in two) — refuse to return them
-    if (changed > 0) throw new IllegalStateException(
-      s"dupClusters did not converge in $maxIter rounds (component diameter too large); " +
-        "raise maxIter or use dupClustersStar (O(log^2 n) rounds)")
-    labels
-  }
+  def dupClusters(ids: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    dupClusters(ids, idCol, pairs, DriverEdges)
 
-  /** Alternating large-star / small-star connected components (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond") — the
-    * scale path [[dupClusters]]'s scaladoc promises: each round SQUARES
-    * the distance labels can jump, so adversarially long chains
-    * converge in O(log² n) rounds instead of O(diameter). Per round:
-    * two groupBy shuffles + a dedup. At fixpoint every component is a
-    * star rooted at its min id; equality-spec'd against [[dupClusters]]
-    * on random graphs.
+  /** [[dupClusters]] with the driver bound as an argument, so a spec
+    * can reach both finishes on small graphs.
     */
-  def dupClustersStar(ids: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 30): DataFrame = {
+  private[dedup] def dupClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
+      driverEdges: Int): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
         .filter(col("u") =!= col("v")).distinct()
+    val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     // large-star: every neighbor LARGER than u links to m = min(Γ(u) ∪ {u})
-    def largeStar(edges: DataFrame): DataFrame = {
-      val bi = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = bi.groupBy(col("u")).agg(least(col("u"), min(col("v"))).as("m"))
-      bi.join(mins, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-    }
-    // small-star: u's smaller neighbors (and u) all link to their min
+    def largeStar(edges: DataFrame): DataFrame =
+      edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(col("u"), min(col("v")).over(byU)))
+        .filter(col("v") > col("u")).select(col("v").as("u"), col("m").as("v"))
+    // small-star: u's smaller neighbors (and u) all link to their min;
+    // large-star's (u, v) edges all have u > v, repeats are harmless
     def smallStar(edges: DataFrame): DataFrame = {
-      val dir = canon(edges) // (u = larger, v = smaller)
-      val mins = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
-      dir.join(mins, "u").filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(mins.select(col("u"), col("m").as("v")))
+      val withMin = edges.withColumn("m", min(col("v")).over(byU))
+      withMin.filter(col("v") =!= col("m")).select(col("v").as("u"), col("m").as("v"))
+        .unionByName(withMin.select(col("u"), col("m").as("v")))
     }
-    var edges = canon(pairs.select(col("id_a").cast("long").as("u"),
-      col("id_b").cast("long").as("v"))).localCheckpoint()
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val next = canon(smallStar(largeStar(edges))).localCheckpoint()
-      converged = next.count() == edges.count() &&
-        next.exceptAll(edges).isEmpty
-      edges = next
-      it += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"dupClustersStar did not converge in $maxIter rounds — raise maxIter")
-    // star edges: (non-root, root); singletons label themselves
-    val roots = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("__root"))
+    // edge counts never grow, so an equal count with no new edge is
+    // the fixpoint: one star per component, (non-root, root) edges
+    @annotation.tailrec
+    def starRounds(edges: DataFrame, n: Long, round: Int): DataFrame =
+      if (n <= driverEdges) minRoots(ids.sparkSession, edges.collect())
+      else if (round == MaxStarRounds) throw new IllegalStateException(
+        s"dupClusters: star rounds did not converge in $MaxStarRounds rounds")
+      else {
+        val next = canon(smallStar(largeStar(edges))).localCheckpoint(eager = false)
+        val m = next.count()
+        if (m == n && next.exceptAll(edges).isEmpty)
+          next.groupBy(col("u").as("id")).agg(min(col("v")).as("__root"))
+        else starRounds(next, m, round + 1)
+      }
+    val edges = canon(pairs.select(col("id_a").cast("long").as("u"),
+      col("id_b").cast("long").as("v")))
+    val head = edges.limit(driverEdges + 1).collect()
+    val roots = if (head.length <= driverEdges) minRoots(ids.sparkSession, head)
+      else { val e = edges.localCheckpoint(eager = false); starRounds(e, e.count(), 0) }
     ids.select(col(idCol).cast("long").as("id"))
       .join(roots, Seq("id"), "left")
       .select(col("id"), coalesce(col("__root"), col("id")).as("cluster"))
+  }
+
+  /** Union-find over collected (u, v) edge rows: an (id, __root) frame
+    * with the min id of each edge node's component. Nodes are indexed
+    * in ascending id order and a union hangs the larger root under the
+    * smaller, so each root is its component's min id.
+    */
+  private def minRoots(spark: SparkSession, edges: Array[Row]): DataFrame = {
+    val nodes = edges.flatMap(e => Array(e.getLong(0), e.getLong(1))).distinct.sorted
+    val parent = Array.range(0, nodes.length)
+    def find(x: Long): Int = {
+      var r = java.util.Arrays.binarySearch(nodes, x)
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    edges.foreach { e =>
+      val (a, b) = (find(e.getLong(0)), find(e.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    spark.createDataFrame(nodes.toSeq.map(x => x -> nodes(find(x)))).toDF("id", "__root")
   }
 }

@@ -584,8 +584,12 @@ object DocQueries {
 
   /** Near-dup clusters (connected components over exact-Jaccard pairs):
     * per non-singleton cluster, its min-id label and size — the
-    * "keep one per cluster" shape of corpus dedup. Oracle = recursive
-    * CTE transitive closure in DuckDB.
+    * "keep one per cluster" shape of corpus dedup. The sample's pairs
+    * (1,058 at sf0.1) sit far under [[Dedup.dupClusters]]' driver
+    * bound, so the components come from one bounded collect and a
+    * driver union-find, not from distributed rounds. Oracle = recursive
+    * CTE transitive closure in DuckDB; `DupClustersOracleSpec` checks
+    * the query against a driver-side fold that shares neither.
     */
   def qDupClusters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
