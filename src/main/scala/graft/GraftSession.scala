@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Opinionated SparkSession builder carrying graft's 100 TB defaults —
   * the knobs every query in this library assumes (SURVEY.md §4). A
-  * user can still override any of them afterwards; `Bench`/`Verify`
-  * set their own core counts for the local harness.
+  * user can still override any of them afterwards. This is the only
+  * place these defaults are written: `Bench`, `Verify`, `perfbench`,
+  * the `graft.tools` mains and the specs' shared session all build
+  * from it, each passing its own core count.
   */
 object GraftSession {
 

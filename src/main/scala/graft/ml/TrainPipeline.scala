@@ -148,8 +148,8 @@ object TrainPipeline {
             initialConfigs = cfg.trialsPerModel, eta = 3, cfg.seed, weightCol = Some("weight"))
           case "tpe" => Trainer.tpeSearch(kind, space, train, valid, cfg.trialsPerModel,
             cfg.seed, weightCol = Some("weight"))
-          case "parallel" => Trainer.randomSearchParallel(kind, space, train, valid,
-            cfg.trialsPerModel, cfg.seed, weightCol = Some("weight"))
+          case "parallel" => Trainer.randomSearch(kind, space, train, valid,
+            cfg.trialsPerModel, cfg.seed, weightCol = Some("weight"), parallelism = 4)
           case _ => Trainer.randomSearch(kind, space, train, valid, cfg.trialsPerModel,
             cfg.seed, weightCol = Some("weight"))
         }

@@ -117,16 +117,11 @@ object Trainer {
     * paths).
     */
   def randomSearchRegression(kind: RegressorKind, space: Seq[ParamRange], train: DataFrame,
-      valid: DataFrame, maxTrials: Int, seed: Long): SearchResult = {
-    val rnd = new scala.util.Random(seed)
-    val trials = (1 to maxTrials).map { _ =>
-      val params = space.map(r => r.name -> r.sample(rnd)).toMap
+      valid: DataFrame, maxTrials: Int, seed: Long): SearchResult =
+    sampleFitScore(space, maxTrials, seed, parallelism = 1) { params =>
       val model: Model[_] = regressor(kind, params).fit(train)
-      (params, model, -validationRmse(model, valid))
+      (model, -validationRmse(model, valid))
     }
-    val (bp, bm, bMetric) = trials.maxBy(_._3)
-    SearchResult(bm, bp, bMetric, trials.map(t => Trial(t._1, t._3)))
-  }
 
   /** Validation ROC-AUC of a fitted model. */
   def validationAuc(model: Transformer, valid: DataFrame): Double = {
@@ -160,32 +155,48 @@ object Trainer {
       weightCol: Option[String] = None): SearchResult = {
     require(kind != GBT,
       "GBTClassifier is binary-only in MLlib; use LogReg (multinomial) or RandomForest for multiclass")
-    val rnd = new scala.util.Random(seed)
-    val scoredTrials = (1 to maxTrials).map { _ =>
-      val params = space.map(r => r.name -> r.sample(rnd)).toMap
+    sampleFitScore(space, maxTrials, seed, parallelism = 1) { params =>
       val model: Model[_] = classifier(kind, params, weightCol).fit(train)
-      (params, model, validationF1Weighted(model, valid))
+      (model, validationF1Weighted(model, valid))
     }
-    val (bp, bm, bmetric) = scoredTrials.maxBy(_._3)
-    SearchResult(bm, bp, bmetric, scoredTrials.map(t => Trial(t._1, t._3)))
   }
 
   /** Seeded random search (Optuna-analog): `maxTrials` samples from the
     * declared ranges, each fit on `train`, scored by ROC-AUC on `valid`,
     * best kept. Train/valid stay distributed; only metrics come back.
+    * `parallelism` > 1 fits the trials concurrently (reference:
+    * optimizer.py:402 tune_model_in_parallel) with identical results:
+    * see [[sampleFitScore]].
     */
   def randomSearch(kind: ModelKind, space: Seq[ParamRange], train: DataFrame,
       valid: DataFrame, maxTrials: Int, seed: Long,
-      weightCol: Option[String] = None): SearchResult = {
-    val rnd = new scala.util.Random(seed)
-    val trials = (1 to maxTrials).map { _ =>
-      val params = space.map(r => r.name -> r.sample(rnd)).toMap
+      weightCol: Option[String] = None, parallelism: Int = 1): SearchResult =
+    sampleFitScore(space, maxTrials, seed, parallelism) { params =>
       val model: Model[_] = classifier(kind, params, weightCol).fit(train)
-      (params, model)
+      (model, validationAuc(model, valid))
     }
-    val scoredTrials = trials.map { case (params, model) => (params, model, validationAuc(model, valid)) }
-    val (bp, bm, bmetric) = scoredTrials.maxBy(_._3)
-    SearchResult(bm, bp, bmetric, scoredTrials.map(t => Trial(t._1, t._3)))
+
+  /** The random-search loop: draw `maxTrials` parameter sets from one
+    * seeded sequence up front, fit and score each (`fitScore` returns
+    * the model and a higher-is-better metric), keep the best; ties go
+    * to the earliest trial. The trials split into `parallelism`
+    * contiguous groups that run as [[graft.Lanes]], each group's trials
+    * in order: every trial is an independent chain of Spark jobs, so
+    * concurrent submission overlaps scheduling gaps. Trial order is
+    * preserved and MLlib fits are deterministic, so the result does not
+    * depend on `parallelism` — only wall-clock does.
+    */
+  private def sampleFitScore(space: Seq[ParamRange], maxTrials: Int, seed: Long,
+      parallelism: Int)(fitScore: Map[String, Double] => (Model[_], Double)): SearchResult = {
+    require(parallelism >= 1)
+    val rnd = new scala.util.Random(seed)
+    val paramSets = (1 to maxTrials).map(_ => space.map(r => r.name -> r.sample(rnd)).toMap)
+    val groupSize = math.max(1, (paramSets.size + parallelism - 1) / parallelism)
+    val scored = graft.Lanes.all(paramSets.grouped(groupSize).toSeq.map { group => () =>
+      group.map { p => val (m, metric) = fitScore(p); (p, m, metric) }
+    }).flatten
+    val (bp, bm, bmetric) = scored.maxBy(_._3)
+    SearchResult(bm, bp, bmetric, scored.map(t => Trial(t._1, t._3)))
   }
 
   /** k-fold cross-validated grid search over a small explicit grid —
@@ -389,34 +400,6 @@ object Trainer {
     }
     val (bp, bm, bmetric) = best.get
     SearchResult(bm, bp, bmetric, trials)
-  }
-
-  /** Random search with trials fitted CONCURRENTLY (reference:
-    * optimizer.py:402 tune_model_in_parallel). Results are IDENTICAL to
-    * [[randomSearch]]: the parameter sets come from the same seeded
-    * sampling sequence drawn up front, trial order is preserved, and
-    * MLlib fits are deterministic — only wall-clock changes. The trials
-    * split into `parallelism` contiguous groups that run as
-    * [[graft.Lanes]], each group's trials in order: every trial is an
-    * independent chain of Spark jobs, so concurrent submission overlaps
-    * scheduling gaps and keeps executors busy while another trial's
-    * driver-side phase runs.
-    */
-  def randomSearchParallel(kind: ModelKind, space: Seq[ParamRange], train: DataFrame,
-      valid: DataFrame, maxTrials: Int, seed: Long,
-      weightCol: Option[String] = None, parallelism: Int = 4): SearchResult = {
-    require(parallelism >= 1)
-    val rnd = new scala.util.Random(seed)
-    val paramSets = (1 to maxTrials).map(_ => space.map(r => r.name -> r.sample(rnd)).toMap)
-    val groupSize = math.max(1, (paramSets.size + parallelism - 1) / parallelism)
-    val scored = graft.Lanes.all(paramSets.grouped(groupSize).toSeq.map { group => () =>
-      group.map { p =>
-        val m: Model[_] = classifier(kind, p, weightCol).fit(train)
-        (p, m, validationAuc(m, valid))
-      }
-    }).flatten
-    val (bp, bm, bmetric) = scored.maxBy(_._3)
-    SearchResult(bm, bp, bmetric, scored.map(t => Trial(t._1, t._3)))
   }
 
   /** Feature importances (tree models) / coefficients (linear) as a

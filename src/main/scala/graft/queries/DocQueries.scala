@@ -239,8 +239,10 @@ object DocQueries {
     * over a tiny shingle vocabulary, so prefix filtering (the real-
     * corpus scale path, [[Dedup.jaccardJoinPrefix]], equality-tested
     * in TextDedupSimSpec) cannot prune and only adds overhead —
-    * measured, not assumed: tools/JaccardPathProbe at sf0.1 times this
-    * sub-corpus at 3.1 s exact vs 5.7 s prefix for identical output.
+    * measured, not assumed: the removed JaccardPathProbe main
+    * (`git show d778dfa:src/main/scala/graft/tools/JaccardPathProbe.scala`)
+    * timed this sub-corpus at sf0.1 at 3.1 s exact vs 5.7 s prefix for
+    * identical output.
     */
   def qNgramJaccard(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -441,8 +443,10 @@ object DocQueries {
     * The floor is measured, not aspirational: this corpus's nearest
     * neighbors sit near the background similarity of random vectors —
     * the regime every bucketing ANN correctly prunes (planesFor refuses
-    * it outright) — and graft.tools.RecallProbe measures recall@3 of
-    * THIS config at 0.29–0.34 across sf0.001/0.01/0.1. The same
+    * it outright) — and the removed RecallProbe main
+    * (`git show d778dfa:src/main/scala/graft/tools/RecallProbe.scala`)
+    * measured recall@3 of THIS config at 0.29–0.34 across
+    * sf0.001/0.01/0.1. The same
     * config+floor is pinned in-suite (TextDedupSimSpec "qAnnLsh shipped
     * config"); planted-neighbor recall (the regime LSH is for) is
     * spec'd ≥ 0.9 under a planesFor-derived config.

@@ -419,9 +419,10 @@ object Streams {
     // candidate-count action now reads the materialized cache's
     // row-count statistics instead — see below). r13 ran FIVE (gate
     // count, two candidate counts, checkpoint, two writes) plus their
-    // AQE sub-stages — ~30 jobs/batch, and MinhashBatchProbe showed the
-    // per-batch floor is job count and inter-job planning gaps, not
-    // data. The cuts: (1) self-pairs are canonicalized into the same
+    // AQE sub-stages — ~30 jobs/batch, and the removed MinhashBatchProbe
+    // main (`git show d778dfa:src/main/scala/graft/tools/MinhashBatchProbe.scala`)
+    // showed the per-batch floor is job count and inter-job planning
+    // gaps, not data. The cuts: (1) self-pairs are canonicalized into the same
     // (id_new=dropped, id_old=keeper) shape as the bipartite pairs, so
     // ONE band join + ONE verify join + ONE count replace two of each;
     // (2) survivors carry their OWN signature column (__sig), so one
@@ -465,7 +466,8 @@ object Streams {
     // the in-batch keep-min rule lshCandidatesBanded expresses as a
     // separate self-join (id_a < id_b, drop id_b). Folding it here
     // removes that join and its own distinct — each is an AQE stage,
-    // and MinhashBatchProbe shows the per-batch floor is stage count.
+    // and MinhashBatchProbe (see above) showed the per-batch floor is
+    // stage count.
     // Every candidate lands canonicalized as (id_new=dropped candidate,
     // id_old=keeper), so one verify join serves both families.
     val oldBands = corpusBands.unionByName(Dedup.bandedSigRows(survSig, b, r))
@@ -540,7 +542,7 @@ object Streams {
     // predicates, and the interpreted higher-order shingling expression
     // re-evaluates per CORPUS row inside a Filter — measured 20 s/
     // microbatch over a 50k kept corpus vs <2 s with the boundary
-    // (MinhashBatchProbe). UNCONDITIONAL repartition, not ensureWidth:
+    // (MinhashBatchProbe, see above). UNCONDITIONAL repartition, not ensureWidth:
     // reading the partition count off this AQE plan would finalize
     // (i.e. EXECUTE) the whole union+semi-join once and the checkpoint
     // would run it again. The shuffle moves only candidate-bounded text
@@ -553,7 +555,7 @@ object Streams {
     // count action first; relying on the WRITE query to materialize
     // was the observed-to-MISS case — the candidate pipeline re-ran
     // inside a 1-task AQE-coalesced stage, 1-2 CPU-s per batch,
-    // MinhashBatchProbe r14. This scan precedes every other consumer,
+    // MinhashBatchProbe r14, see above. This scan precedes every other consumer,
     // so the guarantee holds without the count's job.)
     sc.setJobDescription(s"mh[$batchId] candidate text checkpoint")
     val shOld = Dedup.shingled(

@@ -2,13 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared fixed-cost host-load calibration (r18): the two probes Bench
-  * stamps every capture with, extracted so the dev probes
-  * (AsofSkewProbe, Scd2EqualityProbe, …) self-annotate too. Forged in
-  * fire this round: the as-of skew probe read gated=92.2 s twice and
-  * 16.1 s half an hour later on the SAME binary and data — without a
-  * load stamp the two readings are indistinguishable from a plan
-  * regression, and r18 nearly chased one.
+/** Host-load stamps for every `Bench` and `perfbench` capture. Without
+  * a load stamp, a reading taken on a contended host is
+  * indistinguishable from a plan regression (an as-of skew reading once
+  * went from 92.2 s to 16.1 s on the same binary and data half an hour
+  * apart).
   *
   * CPU axis: 2e9 codegen'd xxhash64 ops over 64 tasks, no shuffle, no
   * FS (shuffle-bearing designs measured 3-39 s idle on one JVM — AQE
@@ -17,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * through a sum — the write/commit/read path the CPU probe is blind
   * to (r17's skew capture read cpu≈1.0 while bit-identical doc
   * controls moved 0.5-2.3×). Each reading is a median-of-3; callers
-  * should invoke an untimed warmup first (see [[readBoth]]).
+  * should invoke an untimed warmup first (`cpuOnce` / `ioOnce`).
   */
 object Calib {
 
@@ -58,26 +56,11 @@ object Calib {
   def ioRead(spark: SparkSession, scratch: String): Double =
     median3(ioOnce(spark, scratch))
 
-  /** One warmup + median-of-3 on both axes, own temp scratch (cleaned).
-    * Returns (cpuSec, ioSec).
-    */
-  def readBoth(spark: SparkSession): (Double, Double) = {
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-calib").toString
-    try {
-      cpuOnce(spark); ioOnce(spark, scratch) // untimed: JIT/codegen
-      (cpuRead(spark), ioRead(spark, scratch))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-      ()
-    }
-  }
-
-  /** JSON fragment (no braces) a probe appends to its output line.
-    * Carries the driver heap too (r18): a probe run at the 16g default
+  /** JSON fragment (no braces) a capture appends to its output line.
+    * Carries the driver heap too (r18): a run at the 16g default
     * instead of the 32g reference seat doubled q_scd2_apply's memory
     * spill and read 2× — the heap is a measurement condition exactly
-    * like host load, so every self-annotating line states it.
+    * like host load, so every stamped line states it.
     */
   def jsonFields(cpuSec: Double, ioSec: Double): String = {
     def f3(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)

@@ -2,8 +2,11 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 
-/** Diagnostic: run named SparkEntry queries (all of them with no args)
-  * and print each one's final executed physical plan, after AQE has
+/** Prints final AQE plans, the plan-level evidence a performance claim
+  * cites next to its timings.
+  *
+  * Runs named SparkEntry queries (all of them with no args) and prints
+  * each one's final executed physical plan, after AQE has
   * re-planned it from the runtime stage statistics. Rows are discarded.
   * Usage: `SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.tools.PlanDump
   * q_scd2 q_roc_auc"`; SPARK_GRAFT_CPUS sets the local core count.

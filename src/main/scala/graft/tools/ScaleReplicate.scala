@@ -1,9 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Bench-only scale-up: replicate an SF directory N× with per-replica
+/** Builds the sf1 / sf10 / sf10skew corpora that `Bench` and the
+  * SCALING.md sweeps read above the driver-provided data.
+  *
+  * Bench-only scale-up: replicate an SF directory N× with per-replica
   * key offsets and content BIJECTIONS, so Bench can measure the
   * wall-clock slope one decade above the driver-provided data
   * (SCALING.md). Not for correctness runs — no oracle exists here.
@@ -68,12 +72,9 @@ object ScaleReplicate {
       case _ => sys.error("usage: ScaleReplicate <srcDir> <dstDir> <factor> [skew|skew40]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = GraftSession.builder("graft-scale-replicate", shufflePartitions = cpus)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

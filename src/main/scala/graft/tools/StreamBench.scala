@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming throughput bench (STREAMING.md): drives the production
+/** The streaming grid that `tools/streambench_capture.py` reads.
+  *
+  * Streaming throughput bench (STREAMING.md): drives the production
   * sinks with REAL StreamingQuery runs — file source, exactly one
   * parquet file per microbatch (`maxFilesPerTrigger=1`), checkpointed
   * foreachBatch — and reports per-batch wall-clock and sustained
@@ -141,7 +143,6 @@ object StreamBench {
       "/tmp/graft-streambench"))
     val spark = graft.GraftSession.builder("stream-bench", cpus)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       // local single-JVM streaming: the FileContext manager's rename
       // path shells out (hadoop Shell) and can hang; checksum writer

@@ -161,10 +161,7 @@ class SourcesPlanSpec extends SparkSpec {
     // view⋈view and entity⋈views joins reuse the windows' key
     // partitioning (no extra exchange, no broadcast fallback needed)
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false",
-      // GraftSession default (subset co-partition reuse) — the shared
-      // spec session is built without GraftSession.builder
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
+      "spark.sql.adaptive.enabled" -> "false") {
       val plan = FeatureStore.historicalFeaturesMulti(entities, "k", "ts_s", "eid", views)
         .queryExecution.executedPlan.toString
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
@@ -506,13 +503,21 @@ class SourcesPlanSpec extends SparkSpec {
   }
 
   test("GraftSession builder carries the scale defaults") {
-    // getOrCreate applies runtime SQL confs to the session (static
-    // confs like extensions need a fresh JVM — registration is
-    // spec'd separately via GraftFunctions.register)
-    val s = graft.GraftSession.builder(shufflePartitions = 16).getOrCreate()
-    assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
-    assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
-    assert(s.conf.get("spark.sql.files.maxPartitionBytes") == (128L * 1024 * 1024).toString)
+    // the shared spec session is built by GraftSession.builder; reading
+    // it (not building a second one) keeps every suite on one config
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == (128L * 1024 * 1024).toString)
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "1024")
+    assert(spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    // the builder's extensions resolve the custom expressions without a
+    // GraftFunctions.register call; a newSession shares the extensions
+    // but not temp functions another suite may have registered
+    Seq(spark, spark.newSession()).foreach { s =>
+      assert(s.sql("SELECT sorted_intersect_size(array('a', 'b', 'c'), array('b', 'c', 'd'))")
+        .head().getInt(0) == 2)
+    }
   }
 
   test("MLlib composite pipeline fits and selects features") {

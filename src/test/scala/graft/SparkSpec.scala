@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (getOrCreate — one JVM-wide). */
+/** Shared local session for all suites (getOrCreate — one JVM-wide),
+  * built from the same [[GraftSession.builder]] as `Bench`, `Verify`
+  * and `perfbench`, so plan contracts hold under the config they run.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder("graft-test", shufflePartitions = 4)
     .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -886,7 +886,8 @@ class TextDedupSimSpec extends SparkSpec {
     // pins the EXACT configuration q_ann_lsh ships (4 planes x seeds
     // 7/19/31, k=3) against the exact top-3 on the same sub-corpus.
     // The floor matches the query's own emitted recall_at_k gate and is
-    // measured (graft.tools.RecallProbe: 0.29-0.34 across SFs) — this
+    // measured (0.29-0.34 across SFs by the removed RecallProbe main:
+    // `git show d778dfa:src/main/scala/graft/tools/RecallProbe.scala`) — this
     // corpus's neighbors sit near background similarity, the regime
     // bucketing ANN correctly prunes; planted-neighbor recall under a
     // planesFor config is spec'd >= 0.9 below.

@@ -158,7 +158,7 @@ class TrainerSpec extends SparkSpec {
     val space = Seq(Trainer.ParamRange("regParam", 1e-4, 1.0, log = true),
       Trainer.ParamRange("elasticNetParam", 0.0, 1.0))
     val seq_ = Trainer.randomSearch(Trainer.LogReg, space, train, valid, 4, 13L)
-    val par = Trainer.randomSearchParallel(Trainer.LogReg, space, train, valid, 4, 13L,
+    val par = Trainer.randomSearch(Trainer.LogReg, space, train, valid, 4, 13L,
       parallelism = 4)
     assert(par.trials.size == 4)
     assert(par.trials.map(_.params) == seq_.trials.map(_.params))
