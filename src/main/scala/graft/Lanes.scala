@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Independent chains of Spark jobs, run side by side.
   *
   * On a small feature set a pipeline step is a long run of small jobs,
@@ -37,5 +39,21 @@ object Lanes {
       throw first
     }
     outcomes.toSeq.collect { case Right(v) => v }
+  }
+
+  /** [[all]] over named lanes: each lane's jobs carry the description
+    * `<prefix>/<name>`, so an event log or the UI attributes every job to
+    * its lane.
+    */
+  def named[T](spark: SparkSession, prefix: String, lanes: Seq[(String, () => T)]): Seq[T] =
+    all(lanes.map { case (name, thunk) => () => described(spark, s"$prefix/$name")(thunk()) })
+
+  /** Run `body` with its jobs described as `description` on this thread,
+    * then restore the thread's previous description. */
+  def described[T](spark: SparkSession, description: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try body finally sc.setJobDescription(previous)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.ml.Transformer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Lanes
+
 /** A deployable scoring bundle: champion model + optional calibration
   * map + tuned decision threshold — what [[TrainPipeline.Result]]
   * carries, persisted as ONE directory so a batch or streaming scorer
@@ -61,13 +63,19 @@ object Deployment {
   }
 
   def save(spark: SparkSession, dir: String, model: Transformer,
-      calibrator: Option[Calibration.Calibrator], threshold: Double): Unit = {
+      calibrator: Option[Calibration.Calibrator], threshold: Double): Unit =
+    Lanes.all(saveWrites(spark, dir, model, calibrator, threshold).map(_._2))
+
+  /** [[save]]'s writes by part name, each to its own path, so they can
+    * run side by side. */
+  def saveWrites(spark: SparkSession, dir: String, model: Transformer,
+      calibrator: Option[Calibration.Calibrator], threshold: Double): Seq[(String, () => Unit)] = {
     import spark.implicits._
-    Champion.save(model, s"$dir/champion")
-    calibrator.foreach(Calibration.save(_, s"$dir/calibrator"))
-    Seq((threshold, calibrator.map(_.method).getOrElse("none")))
-      .toDF("threshold", "calibration_method")
-      .write.mode("overwrite").parquet(s"$dir/decision")
+    Seq("champion" -> (() => Champion.save(model, s"$dir/champion"))) ++
+      calibrator.map(c => "calibrator" -> (() => Calibration.save(c, s"$dir/calibrator"))) :+
+      ("decision" -> (() => Seq((threshold, calibrator.map(_.method).getOrElse("none")))
+        .toDF("threshold", "calibration_method")
+        .write.mode("overwrite").parquet(s"$dir/decision")))
   }
 
   def load(spark: SparkSession, dir: String): Bundle = {

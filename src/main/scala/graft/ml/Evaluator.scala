@@ -2,9 +2,10 @@ package graft.ml
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed, DataFrame-native binary-classification evaluation —
   * the Spark re-expression of the reference's evaluator stack
@@ -185,12 +186,130 @@ object Evaluator {
     * vs empirical positive rate (reference: evaluator.py:716-735
     * _log_calibration_curve).
     */
-  def calibrationCurve(df: DataFrame, labelCol: String, scoreCol: String, bins: Int): DataFrame = {
-    val bin = least(floor(col(scoreCol) * bins), lit(bins - 1)).cast("int")
-    df.groupBy(bin.as("bin"))
+  def calibrationCurve(df: DataFrame, labelCol: String, scoreCol: String, bins: Int): DataFrame =
+    df.groupBy(probBin(col(scoreCol), bins).as("bin"))
       .agg(count(lit(1)).as("n"),
         avg(col(scoreCol)).as("mean_predicted"),
         avg(col(labelCol).cast("double")).as("fraction_positive"))
+
+  /** Equal-width probability bin on [0,1]; 1.0 clamps into the top bin. */
+  private def probBin(score: Column, bins: Int): Column =
+    least(floor(score * bins), lit(bins - 1)).cast("int")
+
+  /** A scored frame reduced to one small table, for the champion tail:
+    * `(threshold-grid cell, calibration bin, label) → (n, Σ score)`, built
+    * by ONE aggregation and ONE collect. A score's cell is the number of
+    * grid thresholds it reaches (`score >= t`), so its prediction at the
+    * grid's j-th smallest threshold is `cell > j`; its bin is
+    * [[calibrationCurve]]'s. The table has at most (|grid| + 1) × bins ×
+    * labels rows at any data size. [[ScoreCounts]] derives the F-beta
+    * sweep, the tuned threshold, the confusion matrix at a grid cut, the
+    * ROC/PR points and the calibration bins from it on the driver.
+    */
+  def scoreCounts(df: DataFrame, labelCol: String, scoreCol: String,
+      thresholds: Seq[Double], bins: Int): ScoreCounts = {
+    val grid = thresholds.distinct.sorted(Ordering.Double.TotalOrdering).toIndexedSeq
+    val score = col(scoreCol)
+    val cell = grid.map(t => (score >= t).cast("int")).reduce(_ + _)
+    val rows = df.groupBy(cell.as("cell"), probBin(score, bins).as("bin"), col(labelCol).as("label"))
+      .agg(count(lit(1)).as("n"), sum(score).as("score_sum"))
+      .collect().toSeq
+      .map(r => ScoreCounts.Entry(Option(r.getAs[Integer](0)).map(_.intValue), r.getInt(1),
+        r.get(2), r.getLong(3), Option(r.getAs[java.lang.Double](4)).fold(0.0)(_.doubleValue)))
+      // a fixed order, so the driver-side sums do not depend on the collect's
+      .sortBy(e => (e.cell.getOrElse(-1), e.bin, String.valueOf(e.label)))
+    ScoreCounts(df.sparkSession, labelCol, df.schema(labelCol).dataType, grid, rows)
+  }
+
+  /** The driver-side table of [[scoreCounts]]. Counts and thresholds
+    * equal those of [[thresholdSweep]], [[Calibration.tuneThreshold]],
+    * [[confusionMatrix]] (at a grid threshold), [[rocPrCurve]] and
+    * [[calibrationCurve]] on the same frame. `mean_predicted` adds the
+    * per-row score sums in another order than `avg`, so it can differ
+    * from [[calibrationCurve]]'s in the last bits.
+    */
+  final case class ScoreCounts(spark: SparkSession, labelCol: String, labelType: DataType,
+      grid: IndexedSeq[Double], rows: Seq[ScoreCounts.Entry]) {
+    import ScoreCounts._
+
+    /** One point per grid threshold, ascending. `fbeta` is None where
+      * its denominator is 0, the rows on which [[thresholdSweep]] reads
+      * null without ANSI and fails with it. Empty for an empty frame, as
+      * the sweep is. */
+    def sweep(beta: Double): Seq[SweepPoint] =
+      if (rows.isEmpty) Seq.empty
+      else grid.indices.map { j =>
+        def n(pred: Boolean, label: Double) = rows.filter(r =>
+          r.cell.exists(c => (c > j) == pred) && r.labelValue.contains(label)).map(_.n).sum
+        val (tp, fp, fn) = (n(true, 1), n(true, 0), n(false, 1))
+        val b2 = beta * beta
+        val num = (1 + b2) * tp
+        val den = num + b2 * fn + fp
+        SweepPoint(grid(j), tp, fp, fn, n(false, 0), if (den == 0) None else Some(num / den))
+      }
+
+    /** [[Calibration.tuneThreshold]]'s pick: fbeta descending (NaN
+      * largest, no value last), then the smaller threshold. */
+    def bestThreshold(beta: Double): Double = {
+      val rank = Ordering.by[SweepPoint, (Int, Double, Double)](p => p.fbeta match {
+        case Some(f) if f.isNaN => (0, 0.0, p.threshold)
+        case Some(f) => (1, -f, p.threshold)
+        case None => (2, 0.0, p.threshold)
+      })(Ordering.Tuple3(Ordering.Int, Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
+      sweep(beta).minOption(rank)
+        .getOrElse(throw new NoSuchElementException("threshold sweep over an empty frame"))
+        .threshold
+    }
+
+    /** [[confusionMatrix]] of the prediction `score >= threshold`, as a
+      * (label, pred, n) frame; `threshold` must be on the grid. */
+    def confusionMatrix(threshold: Double): DataFrame = {
+      val j = grid.indexOf(threshold)
+      require(j >= 0, s"threshold $threshold is not on the grid ${grid.mkString(",")}")
+      val cells = rows.groupMapReduce(r => (r.label, r.cell.map(c => if (c > j) 1 else 0)))(_.n)(_ + _)
+      local(StructType(Seq(StructField(labelCol, labelType), StructField("pred", IntegerType),
+          StructField("n", LongType, nullable = false))),
+        cells.toSeq.sortBy { case ((l, p), _) => (Option(l).map(_.toString), p) }
+          .map { case ((l, p), n) => Row(l, p.map(Int.box).orNull, n) })
+    }
+
+    /** [[rocPrCurve]]'s frame, one row per grid threshold. */
+    def rocPr: DataFrame = {
+      def ratio(num: Long, den: Long): Any = if (den == 0) null else num.toDouble / den
+      local(StructType(StructField("threshold", DoubleType, nullable = false) +:
+          Seq("fpr", "tpr", "precision", "recall").map(StructField(_, DoubleType))),
+        sweep(1.0).map(p => Row(p.threshold, ratio(p.fp, p.fp + p.tn), ratio(p.tp, p.tp + p.fn),
+          ratio(p.tp, p.tp + p.fp), ratio(p.tp, p.tp + p.fn))))
+    }
+
+    /** [[calibrationCurve]]'s frame, one row per non-empty bin. */
+    def calibration: DataFrame = {
+      def mean(sum: Double, n: Long): Any = if (n == 0) null else sum / n
+      local(StructType(Seq(StructField("bin", IntegerType), StructField("n", LongType, nullable = false),
+          StructField("mean_predicted", DoubleType), StructField("fraction_positive", DoubleType))),
+        rows.groupBy(_.bin).toSeq.sortBy(_._1).map { case (bin, rs) =>
+          val scored = rs.filter(_.cell.isDefined)
+          val labelled = rs.flatMap(r => r.labelValue.map(_ -> r.n))
+          Row(bin, rs.map(_.n).sum, mean(scored.map(_.scoreSum).sum, scored.map(_.n).sum),
+            mean(labelled.map { case (l, n) => l * n }.sum, labelled.map(_._2).sum))
+        })
+    }
+
+    private def local(schema: StructType, rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+  }
+
+  object ScoreCounts {
+    /** One table row; `cell` is None for a null score, `label` is the
+      * label column's value. */
+    final case class Entry(cell: Option[Int], bin: Int, label: Any, n: Long, scoreSum: Double) {
+      def labelValue: Option[Double] = label match {
+        case v: Number => Some(v.doubleValue)
+        case _ => None
+      }
+    }
+    final case class SweepPoint(threshold: Double, tp: Long, fp: Long, fn: Long, tn: Long,
+        fbeta: Option[Double])
   }
 
   /** Multiclass per-class metrics + shared accuracy (reference:

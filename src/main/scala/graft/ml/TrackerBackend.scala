@@ -79,15 +79,11 @@ trait TrackerBackend {
 
   /** runIds whose LATEST stage transition is `stage`. */
   final def runIdsAtStage(stage: String): Seq[String] = {
-    val log = stageLog()
-    if (log.isEmpty) Seq.empty
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("runId")).orderBy(col("seq").desc)
-      log.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("stage") === stage)
-        .select("runId").collect().map(_.getString(0)).toSeq
-    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("runId")).orderBy(col("seq").desc)
+    stageLog().withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1 && col("stage") === stage)
+      .select("runId").collect().map(_.getString(0)).toSeq
   }
 
   /** Best run by a metric (ties → most recent), among the most recent
@@ -124,11 +120,14 @@ object TrackerBackend {
     rows.toDF("trial", "params", "metric").orderBy(col("trial"))
   }
 
-  /** A stage-log frame: (runId, stage, seq), the one stage-log schema. */
+  /** The one stage-log schema: (runId, stage, seq). */
+  val StageSchema: StructType = StructType(Seq(
+    StructField("runId", StringType), StructField("stage", StringType),
+    StructField("seq", LongType, nullable = false)))
+
+  /** A stage-log frame with [[StageSchema]]. */
   def stageFrame(spark: SparkSession, rows: Seq[(String, String, Long)]): DataFrame =
-    spark.createDataFrame(rows.map(Row.fromTuple).asJava, StructType(Seq(
-      StructField("runId", StringType), StructField("stage", StringType),
-      StructField("seq", LongType, nullable = false))))
+    spark.createDataFrame(rows.map(Row.fromTuple).asJava, StageSchema)
 }
 
 /** Confusion matrices and curves as parquet files under per-run paths:
@@ -242,8 +241,9 @@ final class ParquetTracker(val spark: SparkSession, dir: String) extends FileRun
     TrackerBackend.stageFrame(spark, Seq((runId, stage, seq)))
       .write.mode("append").parquet(s"$dir/stages")
 
+  // read with the known schema: inferring it would cost a Spark job
   override def stageLog(): DataFrame =
-    if (exists(s"$dir/stages")) spark.read.parquet(s"$dir/stages")
+    if (exists(s"$dir/stages")) spark.read.schema(TrackerBackend.StageSchema).parquet(s"$dir/stages")
     else TrackerBackend.stageFrame(spark, Nil)
 }
 

@@ -19,20 +19,32 @@ import graft.split.Splits
   *
   * Independent chains of Spark jobs run as [[graft.Lanes]]. On a small
   * feature set each step is a run of small, mostly one-task jobs, so a
-  * serial walk leaves most cores idle between driver round trips:
-  *   - each model's search is one lane; results keep `cfg.models` order,
-  *     so `reports` and [[Champion.select]]'s tie-break do not depend on
-  *     which lane finishes first;
-  *   - after threshold tuning, three lanes: the validation metrics;
-  *     every tracker write, on one lane in a fixed order, because each
-  *     search run's logRun appends to the parquet tracker's shared
-  *     `runs` table, whose `_temporary` directory concurrent appends
-  *     would share (trials, the confusion matrix and curves go to
-  *     per-run paths); and persistence (`valid_in` alongside the
-  *     champion bundle, then batch scoring through that bundle);
-  *   - the champion run's logRun and its `stages` entries (register,
-  *     promote) follow the join, on the caller's thread.
-  * Results do not change: every lane runs the same deterministic jobs.
+  * serial walk leaves most cores idle between driver round trips. Every
+  * lane's jobs carry the description `train_pipeline/<lane>`.
+  *   - Search: each model's search is one lane (`search_<model>`);
+  *     results keep `cfg.models` order, so `reports` and
+  *     [[Champion.select]]'s tie-break do not depend on which lane
+  *     finishes first.
+  *   - Tail, on the caller's thread: calibration (`calibrate`), then the
+  *     champion's scores are persisted and reduced to one
+  *     [[Evaluator.scoreCounts]] table in one collect (`score_counts`);
+  *     the threshold is tuned on the driver from it.
+  *   - Tail lanes, one per independent step: `metrics` (binaryMetrics
+  *     for AUC); `search_runs` (each search run's logRun and trials, in
+  *     order); `confusion_matrix`; the curves `roc`, `pr`, `calibration`
+  *     (small local frames off the count table) and `lift` (its own
+  *     ranked pass); the bundle's `champion`, `calibrator` and
+  *     `decision`; `valid_in`; and `valid_scored` (the bundle scoring the
+  *     cached split).
+  *   - After the join, on the caller's thread (`register`): the champion
+  *     run's logRun and its `stages` entries (register, promote), so a
+  *     run only points at a bundle, and is only promoted, once every
+  *     write has landed.
+  * The run log's writes share one lane and the caller's thread because
+  * each logRun and logStage appends to one of the parquet tracker's
+  * shared `runs`/`stages` tables, whose `_temporary` directory concurrent
+  * appends would share; every other write goes to its own path. Results
+  * do not change: every lane runs the same deterministic jobs.
   *
   * Trade-off: concurrent fits hold each model's internal cache at once
   * (LR instance blocks plus GBT tree points), so peak cache is the sum
@@ -138,29 +150,30 @@ object TrainPipeline {
     // multiclass scores by weighted F1 (random search); binary picks the
     // configured strategy
     val multiclass = cfg.objective == "multiclass"
-    val searchMetric = if (multiclass) "valid_weighted_f1" else "valid_auc"
-    val searched = Lanes.all(cfg.models.map { case (kind, space) => () =>
-      val r =
-        if (multiclass) Trainer.randomSearchMulticlass(kind, space, train, valid,
-          cfg.trialsPerModel, cfg.seed, weightCol = Some("weight"))
-        else cfg.searchStrategy match {
-          case "halving" => Trainer.successiveHalving(kind, space, train, valid,
-            initialConfigs = cfg.trialsPerModel, eta = 3, cfg.seed, weightCol = Some("weight"))
-          case "tpe" => Trainer.tpeSearch(kind, space, train, valid, cfg.trialsPerModel,
-            cfg.seed, weightCol = Some("weight"))
-          case "parallel" => Trainer.randomSearch(kind, space, train, valid,
-            cfg.trialsPerModel, cfg.seed, weightCol = Some("weight"), parallelism = 4)
-          case _ => Trainer.randomSearch(kind, space, train, valid, cfg.trialsPerModel,
-            cfg.seed, weightCol = Some("weight"))
-        }
-      (kind.toString, r)
+    val searched = Lanes.named(spark, JobPrefix, cfg.models.map { case (kind, space) =>
+      s"search_$kind" -> (() => {
+        val r =
+          if (multiclass) Trainer.randomSearchMulticlass(kind, space, train, valid,
+            cfg.trialsPerModel, cfg.seed, weightCol = Some("weight"))
+          else cfg.searchStrategy match {
+            case "halving" => Trainer.successiveHalving(kind, space, train, valid,
+              initialConfigs = cfg.trialsPerModel, eta = 3, cfg.seed, weightCol = Some("weight"))
+            case "tpe" => Trainer.tpeSearch(kind, space, train, valid, cfg.trialsPerModel,
+              cfg.seed, weightCol = Some("weight"))
+            case "parallel" => Trainer.randomSearch(kind, space, train, valid,
+              cfg.trialsPerModel, cfg.seed, weightCol = Some("weight"), parallelism = 4)
+            case _ => Trainer.randomSearch(kind, space, train, valid, cfg.trialsPerModel,
+              cfg.seed, weightCol = Some("weight"))
+          }
+        (kind.toString, r)
+      })
     })
     val reports = searched.map { case (name, r) => ModelReport(name, r.bestMetric, r.bestParams) }
     def logSearch(t: TrackerBackend): Unit =
       searched.zipWithIndex.foreach { case ((name, r), i) =>
         t.logRun(ExperimentTracker.Run(
           runId = s"run_${runTag}_${name}_$i", model = name, params = r.bestParams,
-          metrics = Map(searchMetric -> r.bestMetric),
+          metrics = Map(searchMetric(cfg) -> r.bestMetric),
           timestampMs = System.currentTimeMillis() + i))
         t.logTrials(s"run_${runTag}_${name}_$i", r.trials)
       }
@@ -176,87 +189,107 @@ object TrainPipeline {
         return Result(None, reports, 0.5, Map.empty, runTag = runTag)
     }
 
-    // 5. (optional) score calibration, then threshold tuning for the
-    // champion. The fitted calibrator is RETURNED (Result.calibrator) —
-    // tunedThreshold lives on the calibrated scale, so a deployment must
-    // apply the same map. Multiclass: calibration, thresholds, and the
-    // binary curve set don't apply (reference skips ECE for multiclass
-    // too) — metrics come from multiclassSummary, the CM from the argmax
-    // prediction, and tunedThreshold is NaN by contract.
-    val (scored, tuned, calibrator) =
-      if (multiclass) (c.model.transform(valid), Double.NaN, Option.empty[Calibration.Calibrator])
+    // 5. the champion's validation scores, persisted for the whole tail:
+    // binary keeps (pk, label, p) with p the (optionally calibrated)
+    // positive probability, multiclass the argmax prediction. The fitted
+    // calibrator is RETURNED (Result.calibrator) — tunedThreshold lives
+    // on the calibrated scale, so a deployment must apply the same map.
+    // Multiclass: calibration, thresholds, and the binary curve set don't
+    // apply (reference skips ECE for multiclass too) — metrics come from
+    // multiclassSummary, the CM from the argmax prediction, and
+    // tunedThreshold is NaN by contract.
+    val raw = c.model.transform(valid)
+    val (scored, calibrator) =
+      if (multiclass) (raw.select(col(cfg.pkCol), col("label"), col("prediction")), None)
       else {
-        val raw = c.model.transform(valid).withColumn("p", Trainer.posProb("probability"))
-        val (scored, cal) =
-          if (!cfg.calibrate) (raw, None)
-          else {
-            val fitted = Calibration.fitAuto(raw, "p", "label")
-            (fitted.calibrate(raw, "p", "pc").withColumn("p", col("pc")).drop("pc"),
-              Some(fitted))
-          }
-        val (t, _) = Calibration.tuneThreshold(scored, "label", "p", cfg.fbetaBeta, cfg.thresholdGrid)
-        (scored, t, cal)
+        val p = raw.withColumn("p", Trainer.posProb("probability"))
+        val cal = Option.when(cfg.calibrate)(
+          Lanes.described(spark, s"$JobPrefix/calibrate")(Calibration.fitAuto(p, "p", "label")))
+        (cal.fold(p)(_.calibrate(p, "p", "pc").withColumn("p", col("pc")))
+          .select(col(cfg.pkCol), col("label"), col("p")), cal)
       }
+    scored.persist()
+    try {
+      val (tuned, metrics) = tail(spark, cfg, modelDir, runTag, tracker, valid, c, scored,
+        calibrator, logSearch)
+      Result(champion, reports, tuned, metrics, calibrator.map(_.method), calibrator, runTag)
+    } finally scored.unpersist()
+  }
 
-    // 6. three lanes: validation metrics; every tracker write, in order
-    // on one lane (see the object doc for why they share it); and
-    // persistence + batch scoring (inference analog)
-    val metricsLane = () => {
+  private val JobPrefix = "train_pipeline"
+  private def searchMetric(cfg: Config): String =
+    if (cfg.objective == "multiclass") "valid_weighted_f1" else "valid_auc"
+  /** Calibration bins of the logged figure set (EvalArtifacts.logAll's). */
+  private val CalibrationBins = 10
+
+  /** Steps 6 and 7 over the persisted `scored` frame; returns the tuned
+    * threshold and the validation metrics. */
+  private def tail(spark: SparkSession, cfg: Config, modelDir: Option[String], runTag: String,
+      tracker: Option[TrackerBackend], valid: DataFrame, c: Champion.Candidate,
+      scored: DataFrame, calibrator: Option[Calibration.Calibrator],
+      logSearch: TrackerBackend => Unit): (Double, Map[String, Double]) = {
+    val multiclass = cfg.objective == "multiclass"
+    val championRun = s"champion_$runTag"
+    // 6. binary: one count table for the threshold sweep, the confusion
+    // matrix at the tuned cut and the roc/pr/calibration curves — all
+    // from the same (calibrated) scores and the same grid, so the curve
+    // frames contain the deployed operating point
+    val counts = Option.when(!multiclass)(Lanes.described(spark, s"$JobPrefix/score_counts")(
+      Evaluator.scoreCounts(scored, "label", "p", cfg.thresholdGrid, CalibrationBins)))
+    val tuned = counts.fold(Double.NaN)(_.bestThreshold(cfg.fbetaBeta))
+
+    // 7. every independent step of the tail is a lane (see the object doc)
+    val metricsLane = "metrics" -> (() => {
       val m =
         if (multiclass) Evaluator.multiclassSummary(scored, "label", "prediction").head()
         else Evaluator.binaryMetrics(scored, "label", "p", cfg.pkCol, tuned, cfg.fbetaBeta).head()
       m.schema.fieldNames.map(f => f -> m.getAs[Double](f)).toMap
+    })
+    val trackerLanes = tracker.toSeq.flatMap { tk =>
+      Seq("search_runs" -> (() => logSearch(tk)),
+        "confusion_matrix" -> (() => tk.logConfusionMatrix(championRun, counts.fold(
+          Evaluator.confusionMatrix(scored, "label", "prediction"))(_.confusionMatrix(tuned))))) ++
+        counts.filter(_ => cfg.logCurves).toSeq.flatMap(EvalArtifacts.curveWrites(tk, championRun,
+          _, scored, "label", "p", cfg.pkCol))
     }
-    val trackerLane = () => tracker.foreach { tk =>
-      logSearch(tk)
-      // confusion matrix from the SAME (calibrated) scores the
-      // threshold was tuned on — raw scores + a calibrated-scale
-      // threshold would make the logged CM disagree with metrics
-      if (multiclass)
-        tk.logConfusionMatrix(s"champion_$runTag",
-          Evaluator.confusionMatrix(scored, "label", "prediction"))
+    val persistLanes = modelDir.toSeq.flatMap { dir =>
+      val validIn = valid.select(col(cfg.pkCol), col("label"), col(cfg.featureArrayCol))
+      val writeValidIn = () => validIn.write.mode("overwrite").parquet(s"$dir/valid_in")
+      // multiclass: no Deployment bundle — its score() is
+      // positive-probability + threshold algebra, a binary contract; the
+      // champion persists bare and scores valid_in once it has landed
+      if (multiclass) Seq(
+        "champion" -> (() => Champion.save(c.model, s"$dir/champion")),
+        "valid_in" -> (() => {
+          writeValidIn()
+          Champion.batchPredictMulticlass(spark, c.model, s"$dir/valid_in",
+            s"$dir/valid_scored", cfg.featureArrayCol)
+        }))
       else {
-        val withPred = scored.withColumn("pred", Evaluator.predictAt(col("p"), tuned))
-        tk.logConfusionMatrix(s"champion_$runTag",
-          Evaluator.confusionMatrix(withPred, "label", "pred"))
-        // plot-ready figure set from the same calibrated scores AND
-        // the same threshold grid the tuning ran on, so the curve
-        // frames contain the deployed operating point
-        if (cfg.logCurves)
-          EvalArtifacts.logAll(tk, s"champion_$runTag", scored, "label", "p", cfg.pkCol,
-            thresholds = cfg.thresholdGrid)
+        // binary: the full deployable bundle (champion + calibrator +
+        // tuned threshold), reloadable via Deployment.load in a fresh
+        // session, and valid_scored through that same bundle from the
+        // cached split. Its plan is built here, before any lane runs:
+        // scoring sets the calibrator's output column, which the
+        // calibrator's save lane must not see change under it.
+        val validScored = Deployment.Bundle(c.model, calibrator, tuned)
+          .score(validIn, cfg.featureArrayCol)
+          .select(col(cfg.pkCol), col("label"), col(cfg.featureArrayCol), col("prediction"),
+            col("score").as("pos_prob"))
+        Deployment.saveWrites(spark, dir, c.model, calibrator, tuned) ++ Seq(
+          "valid_in" -> writeValidIn,
+          "valid_scored" -> (() => validScored.write.mode("overwrite").parquet(s"$dir/valid_scored")))
       }
     }
-    val persistLane = () => modelDir.foreach { dir =>
-      Lanes.all(Seq(
-        () => valid.select(col(cfg.pkCol), col("label"), col(cfg.featureArrayCol))
-          .write.mode("overwrite").parquet(s"$dir/valid_in"),
-        // multiclass: no Deployment bundle — its score() is
-        // positive-probability + threshold algebra, a binary contract;
-        // the champion persists bare. Binary: the full deployable
-        // bundle (champion + calibrator + tuned threshold), reloadable
-        // via Deployment.load in a fresh session
-        () => if (multiclass) Champion.save(c.model, s"$dir/champion")
-          else Deployment.save(spark, dir, c.model, calibrator, tuned)))
-      // binary: the same calibrated score and tuned cut as the bundle
-      // saved next to it, under the file's `pos_prob` name
-      if (multiclass) Champion.batchPredictMulticlass(spark, c.model, s"$dir/valid_in",
-        s"$dir/valid_scored", cfg.featureArrayCol)
-      else Deployment.Bundle(c.model, calibrator, tuned)
-        .score(spark.read.parquet(s"$dir/valid_in"), cfg.featureArrayCol)
-        .select(col(cfg.pkCol), col("label"), col(cfg.featureArrayCol), col("prediction"),
-          col("score").as("pos_prob"))
-        .write.mode("overwrite").parquet(s"$dir/valid_scored")
-    }
-    val metrics = Lanes.all(Seq[() => Any](metricsLane, trackerLane, persistLane))
+    val metrics = Lanes.named(spark, JobPrefix, metricsLane +: (trackerLanes ++ persistLanes))
       .head.asInstanceOf[Map[String, Double]]
 
-    // 7. the persisted champion registers as a deployable tracker run
+    // 8. the persisted champion registers as a deployable tracker run
     // (model artifact), after every lane has landed
-    for (tk <- tracker; dir <- modelDir) {
+    for (tk <- tracker; dir <- modelDir) Lanes.described(spark, s"$JobPrefix/register") {
       tk.logRun(ExperimentTracker.Run(
-        runId = s"champion_$runTag", model = c.name, params = Map.empty,
-        metrics = metrics + (searchMetric -> c.metric),
+        runId = championRun, model = c.name, params = Map.empty,
+        metrics = metrics + (searchMetric(cfg) -> c.metric),
         timestampMs = System.currentTimeMillis(),
         // `bundle` points at the whole reloadable Deployment.save
         // directory — what ModelRegistry.loadChampionBundle reads
@@ -265,9 +298,9 @@ object TrainPipeline {
           (if (multiclass) Map.empty else Map("bundle" -> dir))))
       // lifecycle: the new run enters as a candidate and is promoted
       // (archiving any prior champion in this tracker)
-      ModelRegistry.register(tk, s"champion_$runTag")
-      ModelRegistry.promote(tk, s"champion_$runTag")
+      ModelRegistry.register(tk, championRun)
+      ModelRegistry.promote(tk, championRun)
     }
-    Result(champion, reports, tuned, metrics, calibrator.map(_.method), calibrator, runTag)
+    (tuned, metrics)
   }
 }

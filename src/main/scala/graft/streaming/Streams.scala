@@ -735,7 +735,8 @@ object Streams {
     * (scored and landed exactly as [[scoringSink]] does) and malformed
     * rows (landed under `quarantinePath` with per-row violation
     * reasons, idempotent per batch id the same way). A poisoned record
-    * quarantines instead of killing the query.
+    * quarantines instead of killing the query. The two writes run side
+    * by side as [[graft.Lanes]]; the batch completes once both landed.
     */
   def scoringSinkValidated(stream: DataFrame, bundle: graft.ml.Deployment.Bundle,
       featureArrayCol: String, rules: Seq[graft.features.FeatureSchema.Rule],
@@ -745,14 +746,16 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val split = graft.features.FeatureSchema.validate(batch, rules)
-        split.quarantine
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("__batch_part", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_part")
-          .parquet(quarantinePath)
-        writeScoredBatch(bundle, split.ok, featureArrayCol, outPath, batchId)
+        graft.Lanes.all(Seq(
+          () => split.quarantine
+            .withColumn("batch_id", lit(batchId))
+            .withColumn("__batch_part", lit(batchId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch_part")
+            .parquet(quarantinePath),
+          () => writeScoredBatch(bundle, split.ok, featureArrayCol, outPath, batchId)))
+        ()
       }
       .start()
 

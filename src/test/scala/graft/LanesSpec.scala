@@ -50,4 +50,31 @@ class LanesSpec extends SparkSpec {
     assert(groups.size >= 2)
     assert(groups.asScala.forall(_ == group), groups.asScala.toSeq)
   }
+
+  test("named lanes describe their jobs <prefix>/<name>; the caller's description stays") {
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val prefix = s"lanes-${java.util.UUID.randomUUID()}"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = String.valueOf(e.properties.getProperty("spark.job.description"))
+        if (d.startsWith(prefix)) descriptions.add(d)
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobDescription("caller")
+    try {
+      val counts = Lanes.named(spark, prefix, Seq(
+        "a" -> (() => spark.range(100).count()), "b" -> (() => spark.range(10).count())))
+      assert(counts == Seq(100L, 10L))
+      assert(Lanes.described(spark, s"$prefix/c")(spark.range(5).count()) == 5L)
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") == "caller")
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (descriptions.size < 3 && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      spark.sparkContext.setJobDescription(null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(descriptions.asScala.toSet == Set("a", "b", "c").map(n => s"$prefix/$n"))
+  }
 }

@@ -380,6 +380,24 @@ class TrainerSpec extends SparkSpec {
     assert(tracker.listRuns().select("runId").as[String].collect().toSet ==
       (searchRuns ++ championRuns).toSet)
     searchRuns.foreach(id => assert(tracker.trialsOf(id).count() == 1, id))
+    // the logged confusion matrix and curves equal the public evaluators
+    // over valid_scored (same calibrated scores) at the tuned cut and
+    // the config's grid; mean_predicted within 1e-12 (ScoreCountsSpec)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    val champ = s"champion_${res.runTag}"
+    assert(rows(tracker.confusionMatrix(champ)) == rows(Evaluator.confusionMatrix(
+      scored.withColumn("pred", Evaluator.predictAt($"pos_prob", res.tunedThreshold)), "label", "pred")))
+    val rocPr = Evaluator.rocPrCurve(scored, "label", "pos_prob", cfg.thresholdGrid)
+    assert(rows(tracker.curve(champ, "roc").frame) == rows(rocPr))
+    assert(rows(tracker.curve(champ, "pr").frame) == rows(rocPr))
+    assert(rows(tracker.curve(champ, "lift").frame) ==
+      rows(Evaluator.liftGains(scored, "label", "pos_prob", "id", 10)))
+    val calib = tracker.curve(champ, "calibration").frame.orderBy($"bin").collect()
+    val calibWant = Evaluator.calibrationCurve(scored, "label", "pos_prob", 10).orderBy($"bin").collect()
+    assert(calib.map(r => (r.getInt(0), r.getLong(1), r.getDouble(3))).toSeq ==
+      calibWant.map(r => (r.getInt(0), r.getLong(1), r.getDouble(3))).toSeq)
+    calib.zip(calibWant).foreach { case (g, w) =>
+      assert(math.abs(g.getDouble(2) - w.getDouble(2)) <= 1e-12) }
     // lifecycle: each run enters as a candidate before it is promoted;
     // the second promotion archives the first champion
     val log = tracker.stageLog().orderBy($"seq").collect()
